@@ -278,6 +278,9 @@ def get_vocabulary_term(
         )
         .withColumn("__match_name", F.lower(F.col("name")))
     )
+    if name_col == "name":
+        # the lookup already carries `name`: keep the caller's one
+        dim = dim.drop("name")
     lookups = names.withColumn("__match_name", F.lower(F.col(name_col)))
     return resolve_unique(
         lookups,

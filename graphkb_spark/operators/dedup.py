@@ -18,6 +18,7 @@ Design for 100 TB:
 from __future__ import annotations
 
 import warnings
+from collections.abc import Callable
 
 import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
@@ -34,40 +35,6 @@ class CandidateBudgetExceeded(RuntimeError):
     exceeds the caller's budget — the corpus is in the
     fixed-vocabulary regime where the exact set-similarity join pays
     its Sum(df^2) lower bound."""
-
-
-def _candidate_budget_gate(
-    op_name: str,
-    est: int,
-    candidate_budget: int,
-    budget_action: str,
-    stats: dict | None,
-    route_name: str,
-) -> bool:
-    """Shared warn/error/route control flow for the candidate-budget
-    guards (``ngram_jaccard_pairs``, ``ngram_containment_pairs``).
-    Records telemetry in ``stats``, raises on 'error', warns
-    otherwise; returns True when the caller should take its routed
-    (banded/approximate) escape path."""
-    routed = est > candidate_budget
-    if stats is not None:
-        stats["candidate_estimate"] = est
-        stats["routed"] = routed and budget_action == "minhash"
-    if not routed:
-        return False
-    msg = (
-        f"{op_name}: prefix-join candidate bound {est:,} exceeds "
-        f"candidate_budget {candidate_budget:,} — the corpus is in the "
-        "fixed-vocabulary regime where the exact join pays Sum(df^2); "
-        f"consider the {route_name} path"
-    )
-    if budget_action == "error":
-        raise CandidateBudgetExceeded(msg)
-    if budget_action == "minhash":
-        warnings.warn(msg + f" (routing to {route_name})", RuntimeWarning)
-        return True
-    warnings.warn(msg, RuntimeWarning)
-    return False
 
 
 def normalized_text(col: str | Column) -> Column:
@@ -100,6 +67,29 @@ def with_words(df: DataFrame, text_col: str, out: str = "__w") -> DataFrame:
     """Materialize the normalized word array as a column so downstream
     shingle lambdas read an attribute, not a re-evaluated expression."""
     return df.withColumn(out, words(text_col))
+
+
+def _doc_tokens(
+    df: DataFrame, text_col: str, id_col: str, key: str, num_partitions: int | None
+) -> DataFrame:
+    """(key, __w): one row per document with its normalized word array,
+    tokenized AFTER the doc-keyed exchange (opt r17, guide §2.5):
+    words() on the scan side serializes the regex tokenization onto the
+    scan's partitions (one row group at small SF = one task); raw text
+    crosses the exchange (fewer bytes than the word array) and the
+    tokenize+shingle+digest chain runs at the operator's parallelism.
+    The select stays un-collapsed downstream (words() is multiply
+    referenced inside the shingle HOF, so CollapseProject keeps it an
+    attribute — verified against the optimized plan).
+
+    ``num_partitions=0`` skips the exchange — the cluster-scale setting
+    for operators whose downstream keys are not the doc id: scan splits
+    already parallelize, so the corpus text never crosses the wire.
+    ``None`` sizes it by ``exchange_width``."""
+    out = df.select(F.col(id_col).alias(key), F.col(text_col).alias("__t"))
+    if num_partitions != 0:
+        out = out.repartition(num_partitions or exchange_width(df), key)
+    return out.select(key, words("__t").alias("__w"))
 
 
 def exact_dedup(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
@@ -348,24 +338,11 @@ def _minhash_state(
     else:
         digest = lambda s: F.pmod(F.xxhash64(s), F.lit(_MH_PRIME))  # noqa: E731
         band_hash = lambda band_slice: F.xxhash64(F.concat_ws(",", band_slice))  # noqa: E731
-    # tokenize AFTER the id exchange (opt r17, guide §2.5): words() on
-    # the scan side serializes the regex tokenization onto the scan's
-    # partitions (one row group at small SF = one task); raw text
-    # crosses the exchange (fewer bytes than the word array) and the
-    # tokenize+shingle+digest chain runs at the operator's parallelism.
-    # The two-step select stays un-collapsed (words() is multiply
-    # referenced inside the shingle HOF, so CollapseProject keeps it an
-    # attribute — verified against the optimized plan).
-    shingled = (
-        df.select(F.col(id_col).alias("__id"), F.col(text_col).alias("__t"))
-        .repartition(n_part, "__id")
-        .select("__id", words("__t").alias("__w"))
-        .select(
-            "__id",
-            F.array_distinct(
-                F.transform(word_shingles("__w", shingle_n), digest)
-            ).alias("__sh"),
-        )
+    shingled = _doc_tokens(df, text_col, id_col, "__id", n_part).select(
+        "__id",
+        F.array_distinct(
+            F.transform(word_shingles("__w", shingle_n), digest)
+        ).alias("__sh"),
     )
     sig_udf = _np_minhash_udf(num_hashes)
     base = (
@@ -477,6 +454,222 @@ def minhash_lsh_pairs(
     )
 
 
+def _shingle_base(
+    df: DataFrame, text_col: str, id_col: str, shingle_n: int, n_part: int
+) -> DataFrame:
+    """PPJoin stage 1, the materialized shingle base: one row per doc,
+    (__id, __sh distinct shingle strings, __shh, __nh).
+
+    __shh holds per-doc 64-bit digests of the shingles, POSITIONALLY
+    parallel to __sh (dups survive under a digest collision); __nh is
+    the hash-distinct size. Both are computed once per doc here, not
+    once per candidate pair, for the verify-stage digest prefilter (opt
+    r18, guide §1.2/§4 — the verify join's string set-ops were the
+    largest data-plane CPU left, and 98-99.9% of candidates FAIL
+    verification, so proving failure on 8-byte longs is the whole
+    win). The base feeds the posting list AND both verify joins;
+    localCheckpoint over persist so blocks free on GC (no cache
+    accumulation across calls in a long-lived session)."""
+    return (
+        _doc_tokens(df, text_col, id_col, "__id", n_part)
+        .select("__id", F.array_distinct(word_shingles("__w", shingle_n)).alias("__sh"))
+        .select(
+            "__id",
+            "__sh",
+            F.transform("__sh", lambda s: F.xxhash64(s)).alias("__shh"),
+        )
+        .withColumn("__nh", F.size(F.array_distinct("__shh")))
+        .transform(materialize)
+    )
+
+
+def _prefix_len(frac: float, n: str) -> Column:
+    """PPJoin prefix length ``n - ceil(frac*n) + 1`` for a required
+    overlap of ``frac * n``. Computing it as floor((1-frac)*n)+1 loses
+    pairs when frac*n is integral (float rounding: 0.7*10 = 6.999... ->
+    floor 6 where the exact prefix is 8); the epsilon inside ceil
+    guards the same artifact on the other side."""
+    return (
+        F.col(n)
+        - F.ceil(F.lit(frac) * F.col(n) - F.lit(1e-9)).cast("int")
+        + F.lit(1)
+    )
+
+
+def _prefix_postings(
+    base: DataFrame, threshold: float, n_part: int, *cols: str
+) -> tuple[DataFrame, DataFrame]:
+    """PPJoin stage 2: the digest posting list (__id, __n, shingle) and
+    its prefix rows — each doc's |x| - ceil(t*|x|) + 1 globally rarest
+    shingles, ranked by (df_ asc, shingle asc) — projected to ``cols``
+    from (__id, __n, shingle, df_, __rk).
+
+    The posting/prefix pipeline runs on 64-bit shingle DIGESTS, not the
+    strings (opt r17, guide §2.3 "narrower types"): the shingle only
+    serves as (a) the freq/candidate equi-join key and (b) the global
+    total order for the prefix ranking — both survive hashing. The
+    prefix, index-prefix and positional filters are lossless under ANY
+    consistent total order of the shingle universe, and a digest
+    collision can only MERGE posting lists (slightly inflating df_ and
+    the candidate set — a superset, never a loss); verification
+    recomputes the exact measure on the full string sets, so the output
+    is bit-identical. 8-byte longs cross the posting exchange instead
+    of ~25-char UTF8 strings, and every sort/join on the hot path
+    compares longs. The digests come precomputed from the base (__shh
+    is positionally parallel to __sh, so exploding it yields the same
+    multiset as explode-then-hash did) — the posting stage reads longs
+    straight off the checkpoint instead of re-hashing every shingle
+    occurrence (opt r18).
+
+    The rank-window exchange is pinned (opt r18, same anti-coalesce
+    rationale as the verify pin in ``_verify_pairs``): the window
+    requires hashpartitioning(__id); left to EnsureRequirements, AQE
+    byte-coalesced the ~4 MB exchange to 3 partitions and serialized
+    the rank + prefix filter + candidate-feed stage onto 3 cores
+    (profiled ~0.8 s run over 3 tasks inside canonical_docs). The
+    explicit same-key repartition satisfies the window's
+    ClusteredDistribution, so the exchange COUNT is unchanged — it is
+    just AQE-exempt and runs at the operator's width."""
+    posting = base.select(
+        "__id", F.size("__sh").alias("__n"), F.explode("__shh").alias("shingle")
+    )
+    freq = posting.groupBy("shingle").agg(F.count(F.lit(1)).alias("df_"))
+    ranked = posting.join(freq, "shingle").repartition(
+        n_part, "__id"
+    ).withColumn(
+        "__rk",
+        F.row_number().over(
+            Window.partitionBy("__id").orderBy(
+                F.col("df_").asc(), F.col("shingle").asc()
+            )
+        ),
+    )
+    prefix = ranked.filter(F.col("__rk") <= _prefix_len(threshold, "__n"))
+    return posting, prefix.select(*cols)
+
+
+def _check_budget_action(budget_action: str) -> None:
+    if budget_action not in ("warn", "error", "minhash"):
+        raise ValueError(
+            f"budget_action={budget_action!r}: expected 'warn', 'error' or 'minhash'"
+        )
+
+
+def _budget_route(
+    prefix: DataFrame,
+    candidate_budget: int | None,
+    budget_action: str,
+    stats: dict | None,
+    op_name: str,
+    estimate: Callable[[DataFrame], DataFrame],
+    route_name: str,
+    route: Callable[[], DataFrame],
+) -> tuple[DataFrame, DataFrame | None]:
+    """PPJoin stage 3, the candidate-budget guard. Returns ``(prefix,
+    routed)``: ``routed`` is ``route()`` when the caller must take its
+    banded/approximate escape path, else None.
+
+    ``candidate_budget=None`` skips the estimate entirely (no extra
+    job, the prefix stays lazy). Otherwise the prefix postings are
+    materialized so the estimate job and the candidate join share the
+    computed posting/rank lineage instead of recomputing it (ADVICE
+    r12); the routed escape still pays this one posting pass — that's
+    the price of an EXACT bound before abandoning the exact join.
+    ``estimate(prefix)`` is the measure's one-row ``__est`` upper bound
+    on candidate rows. Over budget, ``stats`` records the telemetry,
+    'error' raises ``CandidateBudgetExceeded``, 'minhash' warns and
+    routes, 'warn' warns and proceeds exact."""
+    if candidate_budget is None:
+        return prefix, None
+    prefix = prefix.transform(materialize)
+    est = int(estimate(prefix).collect()[0]["__est"] or 0)
+    routed = est > candidate_budget
+    if stats is not None:
+        stats["candidate_estimate"] = est
+        stats["routed"] = routed and budget_action == "minhash"
+    if not routed:
+        return prefix, None
+    msg = (
+        f"{op_name}: prefix-join candidate bound {est:,} exceeds "
+        f"candidate_budget {candidate_budget:,} — the corpus is in the "
+        "fixed-vocabulary regime where the exact join pays Sum(df^2); "
+        f"consider the {route_name} path"
+    )
+    if budget_action == "error":
+        raise CandidateBudgetExceeded(msg)
+    if budget_action == "minhash":
+        warnings.warn(msg + f" (routing to {route_name})", RuntimeWarning)
+        return prefix, route()
+    warnings.warn(msg, RuntimeWarning)
+    return prefix, None
+
+
+def _verify_pairs(
+    cand: DataFrame,
+    base: DataFrame,
+    n_part: int,
+    digest_bound: Column,
+    name: str,
+    value: Column,
+    threshold: float,
+) -> DataFrame:
+    """PPJoin stage 4: dedup the (id_a, id_b) candidate rows, pin the
+    verify exchange, join both sides' shingle sets and keep the pairs
+    whose exact ``value`` (aliased ``name``) reaches ``threshold``.
+
+    Verify-stage parallelism (opt r17, guide §2.5/§8): the verify
+    join's cost is per-pair CPU (set-ops over full shingle sets), not
+    bytes — but AQE coalesces the tiny deduped pair exchange by BYTES
+    (1 MB at sf0.1 -> 1 post-shuffle partition -> the whole verify
+    stage single-threaded: measured 6.0 s on one core inside
+    lsh_band_tuning while 31 idled, and 8.4 s of containment CPU on 5
+    coalesced tasks). An explicit user repartition is exempt from AQE
+    coalescing, so the verify stage always runs at the operator's
+    parallelism. It rides AFTER the dedup aggregation so the map-side
+    partial dedup (the scale lever against duplicate candidate rows)
+    still reduces the first exchange. Keyed on xxhash64 of the pair,
+    NOT (id_a, id_b): the dedup exchange already hash-partitions by the
+    raw pair, so EnsureRequirements would elide a same-key repartition
+    as redundant and AQE would coalesce the surviving exchange right
+    back to one partition (verified against the executed plan); the
+    hashed key also spreads a hot id_a across partitions.
+
+    Digest prefilter (opt r18, guide §1.2 per-task work — exact): when
+    xxhash64 is injective on each doc's shingle set separately (__nh ==
+    __n, true for every real row; a within-doc collision is a ~2^-51
+    event even at 100 TB doc sizes), every hash value in h(A) ∩ h(B)
+    has exactly one preimage in A and one in B, so |h(A) ∩ h(B)| =
+    |A ∩ B| + c and |h(A) ∪ h(B)| = |A ∪ B| - c where c >= 0 counts
+    cross-document collisions — hash-domain Jaccard and containment are
+    monotonically >= their string values. ``digest_bound`` is the
+    measure's hash-domain test against the threshold (with slack for
+    the double divisions and any rounding of the declared value); a
+    pair failing it is PROVABLY below threshold on strings and is
+    dropped having paid only one long-array intersect. Rows with a
+    within-doc collision pass through unconditionally. Measured at
+    sf0.1: 98-99.9% of candidates fail verify, so the expensive string
+    set-op runs on ~1% of pairs. Conjunct order is load-bearing: And
+    short-circuits in codegen, so ``value`` never evaluates for
+    digest-rejected pairs. Columns in scope for ``digest_bound`` and
+    ``value``: sh_*/shh_* (string/digest sets), n_*/nh_* (their
+    sizes), for sides a and b."""
+    cand = cand.dropDuplicates(["id_a", "id_b"]).repartition(
+        n_part, F.xxhash64(F.col("id_a"), F.col("id_b"))
+    )
+    sh = base.select(
+        "__id", "__sh", "__shh", "__nh", F.size("__sh").alias("__n")
+    )
+    joined = cand.join(
+        sh.toDF("id_a", "sh_a", "shh_a", "nh_a", "n_a"), "id_a"
+    ).join(sh.toDF("id_b", "sh_b", "shh_b", "nh_b", "n_b"), "id_b")
+    collision = (F.col("nh_a") < F.col("n_a")) | (F.col("nh_b") < F.col("n_b"))
+    return (
+        joined.filter(collision | digest_bound)
+        .select("id_a", "id_b", value.alias(name))
+        .filter(F.col(name) >= threshold)
+    )
+
+
 def ngram_jaccard_pairs(
     df: DataFrame,
     text_col: str,
@@ -565,119 +758,35 @@ def ngram_jaccard_pairs(
     ``hasher="md5"`` when the routed output must be replicable by an
     ANSI-SQL oracle (the ``ngram_jaccard_routed`` registry query
     checks the escape hatch end-to-end that way)."""
-    if budget_action not in ("warn", "error", "minhash"):
-        raise ValueError(
-            f"budget_action={budget_action!r}: expected 'warn', 'error' or 'minhash'"
-        )
+    _check_budget_action(budget_action)
     n_part = num_partitions or exchange_width(df)
-    # tokenize AFTER the id exchange — same rationale (and the same
-    # CollapseProject-safety argument) as _minhash_state (opt r17)
-    base = (
-        df.select(F.col(id_col).alias("__id"), F.col(text_col).alias("__t"))
-        .repartition(n_part, "__id")
-        .select("__id", words("__t").alias("__w"))
-        .select("__id", F.array_distinct(word_shingles("__w", shingle_n)).alias("__sh"))
-        # __shh: per-doc 64-bit digests of the shingles, POSITIONALLY
-        # parallel to __sh (dups survive under a digest collision);
-        # __nh: the hash-distinct size. Computed once per doc at the
-        # materialize (not once per candidate pair) — they power the
-        # verify-stage digest prefilter (opt r18, guide §1.2/§4: the
-        # verify join's string set-ops were the largest data-plane CPU
-        # left, and 98-99.9% of candidates FAIL verification, so
-        # proving failure on 8-byte longs is the whole win).
-        .select(
-            "__id",
-            "__sh",
-            F.transform("__sh", lambda s: F.xxhash64(s)).alias("__shh"),
-        )
-        .withColumn("__nh", F.size(F.array_distinct("__shh")))
-        # shingle sets feed the posting list AND two verify joins;
-        # localCheckpoint over persist so blocks free on GC (no cache
-        # accumulation across calls in a long-lived session)
-        .transform(materialize)
+    base = _shingle_base(df, text_col, id_col, shingle_n, n_part)
+    _, prefix = _prefix_postings(
+        base, threshold, n_part, "__id", "__n", "__rk", "shingle"
     )
-    # posting/prefix pipeline runs on 64-bit shingle DIGESTS, not the
-    # strings (opt r17, guide §2.3 "narrower types"): the shingle only
-    # serves as (a) the freq/candidate equi-join key and (b) the global
-    # total order for the prefix ranking — both survive hashing. The
-    # prefix, index-prefix and positional filters are lossless under
-    # ANY consistent total order of the shingle universe, and a digest
-    # collision can only MERGE posting lists (slightly inflating df_
-    # and the candidate set — a superset, never a loss); verification
-    # recomputes exact Jaccard on the full string sets, so the output
-    # is bit-identical. 8-byte longs cross the posting exchange instead
-    # of ~25-char UTF8 strings, and every sort/join on the hot path
-    # compares longs. The digests come precomputed from the base
-    # (__shh is positionally parallel to __sh, so exploding it yields
-    # the same multiset as explode-then-hash did) — the posting stage
-    # reads longs straight off the checkpoint instead of re-hashing
-    # every shingle occurrence (opt r18).
-    posting = base.select(
-        "__id", F.size("__sh").alias("__n"), F.explode("__shh").alias("shingle")
-    )
-    freq = posting.groupBy("shingle").agg(F.count(F.lit(1)).alias("df_"))
-    # pin the rank-window exchange (opt r18, same anti-coalesce
-    # rationale as the r17 verify pin): the window requires
-    # hashpartitioning(__id); left to EnsureRequirements, AQE
-    # byte-coalesced the ~4 MB exchange to 3 partitions and serialized
-    # the rank + prefix filter + candidate-feed stage onto 3 cores
-    # (profiled ~0.8 s run over 3 tasks inside canonical_docs). The
-    # explicit same-key repartition satisfies the window's
-    # ClusteredDistribution, so the exchange COUNT is unchanged — it
-    # is just AQE-exempt and runs at the operator's width.
-    ranked = posting.join(freq, "shingle").repartition(
-        n_part, "__id"
-    ).withColumn(
-        "__rk",
-        F.row_number().over(
-            Window.partitionBy("__id").orderBy(
-                F.col("df_").asc(), F.col("shingle").asc()
-            )
+    prefix, routed = _budget_route(
+        prefix, candidate_budget, budget_action, stats,
+        "ngram_jaccard_pairs",
+        lambda p: p.groupBy("shingle")
+        .agg(F.count(F.lit(1)).alias("__c"))
+        .agg(
+            F.sum(F.col("__c") * (F.col("__c") - 1) / 2)
+            .cast("bigint")
+            .alias("__est")
+        ),
+        "minhash_lsh_pairs",
+        lambda: minhash_lsh_pairs(
+            df,
+            text_col,
+            id_col,
+            shingle_n=shingle_n,
+            jaccard_threshold=threshold,
+            num_partitions=num_partitions,
+            **(route_kwargs or {}),
         ),
     )
-    # integral prefix bound: n - ceil(t*n) + 1. Computing it as
-    # floor((1-t)*n)+1 loses pairs when t*n is integral (float rounding:
-    # 0.7*10 = 6.999... -> floor 6 where the exact prefix is 8); the
-    # epsilon inside ceil guards the same artifact on the other side.
-    prefix_len = (
-        F.col("__n")
-        - F.ceil(F.lit(threshold) * F.col("__n") - F.lit(1e-9)).cast("int")
-        + F.lit(1)
-    )
-    prefix = ranked.filter(F.col("__rk") <= prefix_len).select(
-        "__id", "__n", "__rk", "shingle"
-    )
-    if candidate_budget is not None:
-        # materialize the prefix postings so the estimate job and the
-        # candidate join share the computed posting/rank lineage
-        # instead of recomputing it (ADVICE r12); the routed escape
-        # still pays this one posting pass — that's the price of an
-        # EXACT bound before abandoning the exact join
-        prefix = prefix.transform(materialize)
-        est_row = (
-            prefix.groupBy("shingle")
-            .agg(F.count(F.lit(1)).alias("__c"))
-            .agg(
-                F.sum(F.col("__c") * (F.col("__c") - 1) / 2)
-                .cast("bigint")
-                .alias("__est")
-            )
-            .collect()
-        )
-        est = int(est_row[0]["__est"] or 0)
-        if _candidate_budget_gate(
-            "ngram_jaccard_pairs", est, candidate_budget, budget_action,
-            stats, "minhash_lsh_pairs",
-        ):
-            return minhash_lsh_pairs(
-                df,
-                text_col,
-                id_col,
-                shingle_n=shingle_n,
-                jaccard_threshold=threshold,
-                num_partitions=num_partitions,
-                **(route_kwargs or {}),
-            )
+    if routed is not None:
+        return routed
     x = prefix.select(
         F.col("__id").alias("__il"),
         F.col("__n").alias("__nl"),
@@ -695,16 +804,10 @@ def ngram_jaccard_pairs(
     # plan-identical, so the shingle exchange is computed once and
     # reused — the asymmetric pruning still kills the candidate row
     # before it reaches the dedup shuffle, which is the quadratic term
-    index_len_s = (
-        F.col("__ns")
-        - F.ceil(
-            F.lit(2.0 * threshold / (1.0 + threshold)) * F.col("__ns") - F.lit(1e-9)
-        ).cast("int")
-        + F.lit(1)
-    )
+    index_len_s = _prefix_len(2.0 * threshold / (1.0 + threshold), "__ns")
     # required overlap for jaccard >= t: I/(nl+ns-I) >= t  <=>
     # I >= t*(nl+ns)/(1+t); the epsilon guards integral t*(nl+ns)
-    # against float rounding inside ceil (same artifact as prefix_len)
+    # against float rounding inside ceil (same artifact as _prefix_len)
     alpha = F.ceil(
         F.lit(threshold / (1.0 + threshold)) * (F.col("__nl") + F.col("__ns"))
         - F.lit(1e-9)
@@ -735,69 +838,130 @@ def ngram_jaccard_pairs(
             F.least("__il", "__is").alias("id_a"),
             F.greatest("__il", "__is").alias("id_b"),
         )
-        .dropDuplicates(["id_a", "id_b"])
-        # Verify-stage parallelism (opt r17, guide §2.5/§8): the verify
-        # join's cost is per-pair CPU (array_intersect/union over full
-        # shingle sets), not bytes — but AQE coalesces the tiny deduped
-        # pair exchange by BYTES (1 MB at sf0.1 -> 1 post-shuffle
-        # partition -> the whole verify stage single-threaded: measured
-        # 6.0 s on one core inside lsh_band_tuning while 31 idled). An
-        # explicit user repartition is exempt from AQE coalescing, so
-        # the verify stage always runs at the operator's parallelism.
-        # It rides AFTER the dedup aggregation so the map-side partial
-        # dedup (the scale lever against duplicate candidate rows)
-        # still reduces the first exchange. Keyed on xxhash64 of the
-        # pair, NOT (id_a, id_b): the dedup exchange already hash-
-        # partitions by the raw pair, so EnsureRequirements would elide
-        # a same-key repartition as redundant and AQE would coalesce
-        # the surviving exchange right back to one partition (verified
-        # against the executed plan); the hashed key also spreads a
-        # hot id_a across partitions.
-        .repartition(n_part, F.xxhash64(F.col("id_a"), F.col("id_b")))
     )
-    sh = base.select(
-        "__id", "__sh", "__shh", "__nh", F.size("__sh").alias("__n")
-    )
-    joined = cand.join(
-        sh.toDF("id_a", "sh_a", "shh_a", "nh_a", "n_a"), "id_a"
-    ).join(sh.toDF("id_b", "sh_b", "shh_b", "nh_b", "n_b"), "id_b")
-    # Digest prefilter (opt r18, guide §1.2 per-task work — exact):
-    # when xxhash64 is injective on each doc's shingle set separately
-    # (__nh == __n, true for every real row; a within-doc collision is
-    # a ~2^-51 event even at 100 TB doc sizes), every hash value in
-    # h(A) ∩ h(B) has exactly one preimage in A and one in B, so
-    # |h(A) ∩ h(B)| = |A ∩ B| + c and |h(A) ∪ h(B)| = |A ∪ B| - c
-    # where c >= 0 counts cross-document collisions — hash-domain
-    # Jaccard is monotonically >= string Jaccard. A pair whose hash
-    # Jaccard is below threshold (minus 1e-9 slack for the double
-    # divisions) is therefore PROVABLY below threshold on strings and
-    # is dropped having paid only one long-array intersect; rows with
-    # a within-doc collision pass through unconditionally. Measured at
-    # sf0.1: 98-99.9% of candidates fail verify, so the expensive
-    # string set-op runs on ~1% of pairs. Conjunct order is
-    # load-bearing: And short-circuits in codegen, so the string
-    # expression below never evaluates for digest-rejected pairs.
+    # |A ∪ B| = |A| + |B| - |A ∩ B| on the distinct sets — identical
+    # integers to size(array_union), hence a bit-identical double, for
+    # one set-op instead of two (opt r18); the 1e-9 slack covers the
+    # double division in the digest bound
     inter_h = F.size(F.array_intersect("shh_a", "shh_b"))
-    prefilter = (
-        (F.col("nh_a") < F.col("n_a"))
-        | (F.col("nh_b") < F.col("n_b"))
-        | (
-            inter_h / (F.col("nh_a") + F.col("nh_b") - inter_h)
-            >= F.lit(threshold) - F.lit(1e-9)
-        )
-    )
-    # exact value for survivors: |A ∪ B| = |A| + |B| - |A ∩ B| on the
-    # distinct string sets — identical integers to size(array_union),
-    # hence a bit-identical double, for one string set-op instead of
-    # two (opt r18)
     inter_s = F.size(F.array_intersect("sh_a", "sh_b"))
-    jac = (inter_s / (F.col("n_a") + F.col("n_b") - inter_s)).alias("jaccard")
-    out = (
-        joined.filter(prefilter)
-        .select("id_a", "id_b", jac)
-        .filter(F.col("jaccard") >= threshold)
+    return _verify_pairs(
+        cand,
+        base,
+        n_part,
+        inter_h / (F.col("nh_a") + F.col("nh_b") - inter_h)
+        >= F.lit(threshold) - F.lit(1e-9),
+        "jaccard",
+        inter_s / (F.col("n_a") + F.col("n_b") - inter_s),
+        threshold,
     )
-    return out
+
+
+def _gram_digest(g) -> Column:
+    """The decontamination family's 60-bit ANSI md5-prefix digest —
+    shared by the batch flag/cut operators and the streaming filter so
+    every flavor probes the identical digest domain (oracle-replicable;
+    60 bits keeps collisions negligible where the 31-bit minhash field
+    would not)."""
+    return F.conv(F.substring(F.md5(g), 1, 15), 16, 10).cast("bigint")
+
+
+def _gram_stream(
+    tokens: DataFrame, k: int, *keys: str, positions: bool = False
+) -> DataFrame:
+    """(*keys, [__p,] __d): one row per k-token gram of a tokenized
+    (*keys, __w) frame — its digest, plus its 0-based start position
+    when ``positions``. Docs shorter than k tokens emit no grams."""
+    gen, out = (F.posexplode, ("__p", "__g")) if positions else (F.explode, ("__g",))
+    return (
+        tokens.filter(F.size("__w") >= k)
+        .select(*keys, gen(word_shingles(F.col("__w"), k)).alias(*out))
+        .select(*keys, *out[:-1], _gram_digest(F.col("__g")).alias("__d"))
+    )
+
+
+def _gram_digests(
+    df: DataFrame, text_col: str, k: int, *key_cols: Column
+) -> DataFrame:
+    """Distinct (*keys, __d) k-gram digests of an evaluation set — the
+    bounded probe side of every decontamination flavor. ``key_cols``
+    are aliased columns (item id, set label) carried beside each
+    digest; none gives the set-wide digest table."""
+    tokens = df.select(*key_cols, words(text_col).alias("__w"))
+    return _gram_stream(tokens, k, *tokens.columns[:-1]).distinct()
+
+
+def _resolve_broadcast(
+    digests: DataFrame,
+    broadcast: bool | str,
+    max_digests: int,
+    multi_consumer: bool = False,
+) -> tuple[DataFrame, bool]:
+    """The decontamination family's broadcast contract for its bounded
+    digest side; returns ``(digests, broadcast)`` with the decision
+    resolved to a bool.
+
+    A forced hint bypasses autoBroadcastJoinThreshold, so it carries a
+    size contract: the digests must fit an executor (~8 bytes/gram; a
+    1M-question eval set is tens of MB — fine; a swapped
+    corpus/benchmark argument order is NOT). ``"auto"`` (VERDICT r12
+    #5) lets one count job over the distinct digests decide: the hint
+    applies only at or below ``max_digests`` (default 4M digests ~
+    32 MB payload); above it the join falls back to a plain equi-join
+    and AQE picks the strategy from the measured size, so an
+    argument-order mistake degrades to a shuffle instead of an
+    executor OOM. ``True`` forces the hint, ``False`` never hints.
+
+    Staging: a ``multi_consumer`` table (read by the probe AND another
+    branch) is staged unconditionally with eager=False, so the
+    benchmark tokenize+distinct runs exactly once per call while
+    CONSTRUCTION stays lazy (ADVICE r14): plan-only callers with an
+    explicit True/False trigger no Spark job, and the auto count (or
+    the first consumer action) materializes it — parquet checkpoint
+    mode excepted, whose staging write is inherently eager (ADVICE
+    r15, see materialize()). A single-consumer table is staged only on
+    the auto path, where the count job would otherwise replay the
+    lineage the probe join repeats (VERDICT r13 #3); elsewhere staging
+    would only add a checkpoint write (VERDICT r14 #7). Erasing
+    Catalyst's static size stats at the checkpoint is safe: the
+    consumer join is either explicitly hinted or AQE-planned from the
+    measured runtime size."""
+    if broadcast not in (True, False, "auto"):
+        raise ValueError(
+            f"broadcast={broadcast!r}: expected True, False or 'auto'"
+        )
+    if multi_consumer:
+        digests = digests.transform(materialize, eager=False)
+    elif broadcast == "auto":
+        digests = digests.transform(materialize)
+    if broadcast == "auto":
+        broadcast = digests.count() <= max_digests
+    return digests, broadcast
+
+
+def _probe_rows(
+    corpus: DataFrame,
+    text_col: str,
+    id_col: str,
+    k: int,
+    num_partitions: int | None,
+) -> DataFrame:
+    """(__id, __n, __d): the corpus gram stream of the whole-doc
+    probes, on which every doc rides exactly once — sub-k docs
+    contribute one null-digest row via ``explode_outer`` (a null digest
+    never matches the probe), and the doc's gram count ``__n`` travels
+    arithmetically beside its grams, so one doc-keyed aggregation
+    yields hits AND fill-in zeros with no join back to the doc list."""
+    tokens = _doc_tokens(corpus, text_col, id_col, "__id", num_partitions)
+    return tokens.select(
+        "__id",
+        F.greatest(F.size("__w") - F.lit(k - 1), F.lit(0))
+        .cast("bigint")
+        .alias("__n"),
+        F.explode_outer(
+            F.when(F.size("__w") >= k, word_shingles(F.col("__w"), k))
+        ).alias("__g"),
+    ).select("__id", "__n", _gram_digest(F.col("__g")).alias("__d"))
 
 
 def repeated_spans(
@@ -836,13 +1000,7 @@ def repeated_spans(
     if k < 1 or min_count < 2:
         raise ValueError("k must be >= 1 and min_count >= 2")
     n_part = num_partitions or exchange_width(df)
-    # tokenize AFTER the id exchange — same rationale and
-    # CollapseProject-safety argument as the pair builders (opt r17)
-    base = (
-        df.select(F.col(id_col).alias("__id"), F.col(text_col).alias("__t"))
-        .repartition(n_part, "__id")
-        .select("__id", words("__t").alias("__w"))
-    )
+    base = _doc_tokens(df, text_col, id_col, "__id", n_part)
     return _repeated_spans_from_tokens(base, id_col, k, min_count)
 
 
@@ -852,16 +1010,9 @@ def _repeated_spans_from_tokens(
     """Span computation over a pre-tokenized (__id, __w) frame, shared
     by ``repeated_spans`` and ``cut_repeated_spans`` so the cut path
     normalizes/tokenizes the corpus ONCE (ADVICE r11)."""
-    grams = base.filter(F.size("__w") >= k).select(
-        "__id", F.posexplode(word_shingles(F.col("__w"), k)).alias("__p", "__g")
-    ).select(
-        "__id",
-        "__p",
-        F.conv(F.substring(F.md5("__g"), 1, 15), 16, 10).cast("bigint").alias("__d"),
-    )
     # positions feed the count AND the join-back; materialize once so
     # the normalize/shingle/md5 scan doesn't run twice
-    grams = grams.transform(materialize)
+    grams = _gram_stream(base, k, "__id", positions=True).transform(materialize)
     dup_digests = (
         grams.groupBy("__d")
         .agg(F.count(F.lit(1)).alias("__c"))
@@ -959,14 +1110,8 @@ def cut_repeated_spans(
     if k < 1 or min_count < 2:
         raise ValueError("k must be >= 1 and min_count >= 2")
     n_part = num_partitions or exchange_width(df)
-    # tokenize AFTER the id exchange — same rationale as the pair
-    # builders (opt r17); the checkpoint stores tokens, not raw text
-    base = (
-        df.select(F.col(id_col).alias("__id"), F.col(text_col).alias("__t"))
-        .repartition(n_part, "__id")
-        .select("__id", words("__t").alias("__w"))
-        .transform(materialize)
-    )
+    # the checkpoint stores tokens, not raw text
+    base = _doc_tokens(df, text_col, id_col, "__id", n_part).transform(materialize)
     spans = _repeated_spans_from_tokens(base, id_col, k, min_count)
     return _cut_spans(base, spans, id_col)
 
@@ -995,38 +1140,23 @@ def cut_contaminated_spans(
     ``_cut_spans``), so span semantics are identical between the
     within-corpus and against-benchmark cleaners.
 
-    Scale shape: the benchmark digest side follows the
-    ``exact_substring_contamination`` broadcast contract
-    (size-checked ``"auto"`` default — hint under
-    ``broadcast_max_digests``, AQE fallback above; in the auto path
-    the digests are materialized once before the count, so the
-    benchmark tokenize+distinct never runs twice); the corpus-side
+    Scale shape: the benchmark digest side follows the family's
+    size-checked broadcast contract (``_resolve_broadcast``); the corpus-side
     positional gram stream probes that join and never shuffles, and
     the only corpus-keyed exchanges are the island window and the
     span join-back, both on the already-co-partitioned doc id. Docs
     shorter than k tokens emit no grams and pass through uncut."""
     if k < 1:
         raise ValueError("k must be >= 1")
-    if broadcast not in (True, False, "auto"):
-        raise ValueError(
-            f"broadcast={broadcast!r}: expected True, False or 'auto'"
-        )
     n_part = num_partitions or exchange_width(corpus)
-    bench_d = _bench_gram_digests(benchmark, text_col, k)
-    if broadcast == "auto":
-        bench_d = bench_d.transform(materialize)
-        broadcast = bench_d.count() <= broadcast_max_digests
-    # tokenize AFTER the id exchange — same rationale as the pair
-    # builders (opt r17); the checkpoint stores tokens, not raw text
-    base = (
-        corpus.select(F.col(id_col).alias("__id"), F.col(text_col).alias("__t"))
-        .repartition(n_part, "__id")
-        .select("__id", words("__t").alias("__w"))
-        .transform(materialize)
+    bench_d, broadcast = _resolve_broadcast(
+        _gram_digests(benchmark, text_col, k), broadcast, broadcast_max_digests
     )
-    grams = base.filter(F.size("__w") >= k).select(
-        "__id", F.posexplode(word_shingles(F.col("__w"), k)).alias("__p", "__g")
-    ).select("__id", "__p", _gram_digest(F.col("__g")).alias("__d"))
+    # the checkpoint stores tokens, not raw text
+    base = _doc_tokens(corpus, text_col, id_col, "__id", n_part).transform(
+        materialize
+    )
+    grams = _gram_stream(base, k, "__id", positions=True)
     pos = grams.join(
         F.broadcast(bench_d) if broadcast else bench_d, "__d"
     ).select("__id", "__p")
@@ -1091,41 +1221,21 @@ def cut_multi_benchmark_spans(
     (oracle-replicable)."""
     if k < 1:
         raise ValueError("k must be >= 1")
-    if broadcast not in (True, False, "auto"):
-        raise ValueError(
-            f"broadcast={broadcast!r}: expected True, False or 'auto'"
-        )
     n_part = num_partitions or exchange_width(corpus)
-    bench_g = (
-        benchmarks.select(
-            F.col(set_col).cast("string").alias("__s"),
-            words(text_col).alias("__w"),
-        )
-        .filter(F.size("__w") >= k)
-        .select("__s", F.explode(word_shingles(F.col("__w"), k)).alias("__g"))
-        .select("__s", _gram_digest(F.col("__g")).alias("__d"))
-        .distinct()
+    # one data consumer: attribution reads the probe's OUTPUT, not the
+    # digest table again
+    bench_g, broadcast = _resolve_broadcast(
+        _gram_digests(
+            benchmarks, text_col, k, F.col(set_col).cast("string").alias("__s")
+        ),
+        broadcast,
+        broadcast_max_digests,
     )
-    # single data consumer (the probe join — attribution reads the
-    # probe's OUTPUT, not the digest table again), so staging outside
-    # the auto path would only add a checkpoint write; the auto branch
-    # stages so the count() job and the probe share one
-    # tokenize+distinct (the benchmark_leak_spans asymmetry, VERDICT
-    # r14 #7)
-    if broadcast == "auto":
-        bench_g = bench_g.transform(materialize)
-        broadcast = bench_g.count() <= broadcast_max_digests
-    # tokenize AFTER the id exchange — same rationale as the pair
-    # builders (opt r17); the checkpoint stores tokens, not raw text
-    base = (
-        corpus.select(F.col(id_col).alias("__id"), F.col(text_col).alias("__t"))
-        .repartition(n_part, "__id")
-        .select("__id", words("__t").alias("__w"))
-        .transform(materialize)
+    # the checkpoint stores tokens, not raw text
+    base = _doc_tokens(corpus, text_col, id_col, "__id", n_part).transform(
+        materialize
     )
-    grams = base.filter(F.size("__w") >= k).select(
-        "__id", F.posexplode(word_shingles(F.col("__w"), k)).alias("__p", "__g")
-    ).select("__id", "__p", _gram_digest(F.col("__g")).alias("__d"))
+    grams = _gram_stream(base, k, "__id", positions=True)
     # staged: TWO consumers (island window + attribution) read the
     # matched positions, and without the checkpoint each would replay
     # the corpus gram stream — the dominant scan+digest CPU — through
@@ -1220,52 +1330,19 @@ def benchmark_leak_report(
     (oracle-replicable)."""
     if k < 1:
         raise ValueError("k must be >= 1")
-    if broadcast not in (True, False, "auto"):
-        raise ValueError(
-            f"broadcast={broadcast!r}: expected True, False or 'auto'"
-        )
-    n_part = num_partitions or exchange_width(corpus)
-    bench_g = (
-        benchmark.select(F.col(id_col).alias("__bid"), words(text_col).alias("__w"))
-        .filter(F.size("__w") >= k)
-        .select("__bid", F.explode(word_shingles(F.col("__w"), k)).alias("__g"))
-        .select("__bid", _gram_digest(F.col("__g")).alias("__d"))
-        .distinct()
-        # multi-consumer staging table (probe join AND per-item totals
-        # read it), so it is materialized unconditionally — the
-        # benchmark tokenize+distinct runs exactly once per call, and
-        # the auto-broadcast count job reads the staged result too.
-        # eager=False keeps CONSTRUCTION lazy (ADVICE r14): plan-only
-        # callers with explicit broadcast=True/False trigger no Spark
-        # job; the auto branch's count() below (or the first consumer
-        # action) materializes the checkpoint, after which every
-        # consumer scans the staged result. Parquet checkpoint mode is
-        # the documented exception (ADVICE r15): its staging write is
-        # inherently eager, so construction runs a job there —
-        # materialize()'s docstring carries the contract.
-        .transform(materialize, eager=False)
+    # probe join AND per-item totals read the digest table
+    bench_g, broadcast = _resolve_broadcast(
+        _gram_digests(benchmark, text_col, k, F.col(id_col).alias("__bid")),
+        broadcast,
+        broadcast_max_digests,
+        multi_consumer=True,
     )
-    if broadcast == "auto":
-        broadcast = bench_g.count() <= broadcast_max_digests
-    corp = corpus.select(F.col(id_col).alias("__cid"), F.col(text_col).alias("__t"))
-    if num_partitions != 0:
-        # local parallelism aid only — the downstream aggs key by
-        # BENCHMARK id, so this doc-keyed exchange serves nothing but
-        # task balance for the explode. num_partitions=0 skips it (the
-        # cluster-scale setting: scan splits parallelize, and the
-        # corpus text then never crosses the wire at all — the only
-        # shuffle left is the map-side-collapsed per-item distincts).
-        corp = corp.repartition(n_part, "__cid")
-    # tokenize AFTER the conditional exchange (opt r17): on the
-    # spread path the regex tokenization runs at n_part instead of on
-    # the scan's partitions, and the exchange ships raw text (fewer
-    # bytes than the word array); on the num_partitions=0 path this is
-    # the identical plan
-    corp = corp.select("__cid", words("__t").alias("__w"))
-    grams = (
-        corp.filter(F.size("__w") >= k)
-        .select("__cid", F.explode(word_shingles(F.col("__w"), k)).alias("__g"))
-        .select("__cid", _gram_digest(F.col("__g")).alias("__d"))
+    # the downstream aggs key by BENCHMARK id, so the doc-keyed
+    # exchange is a local parallelism aid only (num_partitions=0 skips
+    # it; the only shuffle left is the map-side-collapsed per-item
+    # distincts)
+    grams = _gram_stream(
+        _doc_tokens(corpus, text_col, id_col, "__cid", num_partitions), k, "__cid"
     )
     matches = grams.join(
         F.broadcast(bench_g) if broadcast else bench_g, "__d"
@@ -1350,51 +1427,20 @@ def benchmark_leak_spans(
     (oracle-replicable)."""
     if k < 1:
         raise ValueError("k must be >= 1")
-    if broadcast not in (True, False, "auto"):
-        raise ValueError(
-            f"broadcast={broadcast!r}: expected True, False or 'auto'"
-        )
-    n_part = num_partitions or exchange_width(corpus)
-    bench_g = (
-        benchmark.select(F.col(id_col).alias("__bid"), words(text_col).alias("__w"))
-        .filter(F.size("__w") >= k)
-        .select("__bid", F.explode(word_shingles(F.col("__w"), k)).alias("__g"))
-        .select("__bid", _gram_digest(F.col("__g")).alias("__d"))
-        .distinct()
+    # one data consumer: the probe join
+    bench_g, broadcast = _resolve_broadcast(
+        _gram_digests(benchmark, text_col, k, F.col(id_col).alias("__bid")),
+        broadcast,
+        broadcast_max_digests,
     )
-    # staging asymmetry, on purpose: the digest table has exactly ONE
-    # data consumer here (the probe join — unlike benchmark_leak_report
-    # there is no per-item totals branch), so outside the auto path
-    # staging would only add a checkpoint write. The auto branch stages
-    # it because the count() job would otherwise replay the
-    # tokenize+distinct lineage the probe join then repeats. If a
-    # second consumer of bench_g is ever added, stage it
-    # unconditionally (eager=False) like benchmark_leak_report does
-    # (VERDICT r14 #7).
-    if broadcast == "auto":
-        bench_g = bench_g.transform(materialize)
-        broadcast = bench_g.count() <= broadcast_max_digests
-    grams = (
-        corpus.select(F.col(id_col).alias("__cid"), F.col(text_col).alias("__t"))
-        # the island window keys by (item, doc), so this doc-keyed
-        # exchange is a local parallelism aid only; num_partitions=0
-        # skips it (cluster-scale: the corpus text never shuffles, the
-        # window exchange carries matched positions only)
-        .transform(
-            lambda d: d if num_partitions == 0 else d.repartition(
-                n_part, "__cid"
-            )
-        )
-        # tokenize AFTER the conditional exchange (opt r17): the regex
-        # pass runs at n_part on the spread path; identical plan when
-        # num_partitions=0
-        .select("__cid", words("__t").alias("__w"))
-        .filter(F.size("__w") >= k)
-        .select(
-            "__cid",
-            F.posexplode(word_shingles(F.col("__w"), k)).alias("__p", "__g"),
-        )
-        .select("__cid", "__p", _gram_digest(F.col("__g")).alias("__d"))
+    # the island window keys by (item, doc), so the doc-keyed exchange
+    # is a local parallelism aid only (num_partitions=0 skips it; the
+    # window exchange carries matched positions only)
+    grams = _gram_stream(
+        _doc_tokens(corpus, text_col, id_col, "__cid", num_partitions),
+        k,
+        "__cid",
+        positions=True,
     )
     # one matched corpus position per (item, doc, p): the digest is a
     # function of the position and bench_g is distinct per (item,
@@ -1451,48 +1497,23 @@ def multi_benchmark_leak_spans(
     corpus-volume."""
     if k < 1:
         raise ValueError("k must be >= 1")
-    if broadcast not in (True, False, "auto"):
-        raise ValueError(
-            f"broadcast={broadcast!r}: expected True, False or 'auto'"
-        )
-    n_part = num_partitions or exchange_width(corpus)
-    bench_g = (
-        benchmarks.select(
+    # one data consumer: the probe join
+    bench_g, broadcast = _resolve_broadcast(
+        _gram_digests(
+            benchmarks,
+            text_col,
+            k,
             F.col(id_col).alias("__bid"),
             F.col(set_col).alias("__set"),
-            words(text_col).alias("__w"),
-        )
-        .filter(F.size("__w") >= k)
-        .select(
-            "__bid", "__set",
-            F.explode(word_shingles(F.col("__w"), k)).alias("__g"),
-        )
-        .select("__bid", "__set", _gram_digest(F.col("__g")).alias("__d"))
-        .distinct()
+        ),
+        broadcast,
+        broadcast_max_digests,
     )
-    # single data consumer (the probe join) — the benchmark_leak_spans
-    # staging-asymmetry note applies verbatim: only the auto branch
-    # stages, so its count() does not replay the tokenize+distinct
-    # lineage the probe join repeats
-    if broadcast == "auto":
-        bench_g = bench_g.transform(materialize)
-        broadcast = bench_g.count() <= broadcast_max_digests
-    grams = (
-        corpus.select(F.col(id_col).alias("__cid"), F.col(text_col).alias("__t"))
-        .transform(
-            lambda d: d if num_partitions == 0 else d.repartition(
-                n_part, "__cid"
-            )
-        )
-        # tokenize AFTER the conditional exchange (opt r17) — same
-        # rationale as benchmark_leak_spans
-        .select("__cid", words("__t").alias("__w"))
-        .filter(F.size("__w") >= k)
-        .select(
-            "__cid",
-            F.posexplode(word_shingles(F.col("__w"), k)).alias("__p", "__g"),
-        )
-        .select("__cid", "__p", _gram_digest(F.col("__g")).alias("__d"))
+    grams = _gram_stream(
+        _doc_tokens(corpus, text_col, id_col, "__cid", num_partitions),
+        k,
+        "__cid",
+        positions=True,
     )
     pos = grams.join(
         F.broadcast(bench_g) if broadcast else bench_g, "__d"
@@ -1595,21 +1616,13 @@ def benchmark_overlap_matrix(
     if k < 1:
         raise ValueError("k must be >= 1")
     sets = benchmarks.select(F.col(set_col).alias("__sa")).distinct()
-    g = (
-        benchmarks.select(
-            F.col(set_col).alias("__s"), words(text_col).alias("__w")
-        )
-        .filter(F.size("__w") >= k)
-        .select("__s", F.explode(word_shingles(F.col("__w"), k)).alias("__g"))
-        .select("__s", _gram_digest(F.col("__g")).alias("__d"))
-        .distinct()
-        # three consumers (sizes + both sides of the pair join);
-        # eager=False so CONSTRUCTION stays lazy (ADVICE r14) — the
-        # first action materializes the checkpoint and the other
-        # consumers scan it (parquet checkpoint mode excepted — its
-        # staging write is inherently eager; see materialize())
-        .transform(materialize, eager=False)
-    )
+    # three consumers (sizes + both sides of the pair join), staged
+    # lazily: the first action materializes the checkpoint and the
+    # other consumers scan it (parquet checkpoint mode excepted — its
+    # staging write is inherently eager; see materialize())
+    g = _gram_digests(
+        benchmarks, text_col, k, F.col(set_col).alias("__s")
+    ).transform(materialize, eager=False)
     sizes = g.groupBy("__s").agg(F.count(F.lit(1)).cast("bigint").alias("__n"))
     shared = (
         g.select(F.col("__s").alias("__sa"), "__d")
@@ -1676,62 +1689,19 @@ def exact_substring_contamination(
     side (eval sets are small by definition) — when broadcast, Spark
     ships them into the probe join, so the corpus-side gram stream
     never shuffles; the per-doc hit count partial-aggregates map-side
-    keyed by the already-co-partitioned doc id. A forced hint
-    bypasses autoBroadcastJoinThreshold, so it carries a size
-    contract: benchmark digests must fit an executor (~8 bytes/gram;
-    a 1M-question eval set is tens of MB — fine; a swapped
-    corpus/benchmark argument order is NOT). ``broadcast`` therefore
-    defaults to ``"auto"`` (VERDICT r12 #5): one count job over the
-    distinct digests decides, and the hint is applied only below
-    ``broadcast_max_digests`` (default 4M digests ~ 32 MB payload);
-    above it the join falls back to a plain equi-join and AQE picks
-    the strategy from the measured size, so an argument-order mistake
-    degrades to a shuffle instead of an executor OOM. In the auto
-    path the digest side is MATERIALIZED before the count (the
-    ``streaming_decontaminate`` staged-once pattern,
-    streaming/incremental.py) so the benchmark tokenize+distinct runs
-    exactly once — the count job and the probe join share the staged
-    table instead of each replaying the lineage (VERDICT r13 #3).
-    Erasing Catalyst's static size stats is safe here because the
-    consumer join is either explicitly hinted (below the cap) or
-    AQE-planned from measured runtime size (above it) — static stats
-    decide nothing either way. ``True`` forces the hint
-    unconditionally (the r12 behavior), ``False`` never hints. Same 60-bit ANSI md5-prefix digest as ``repeated_spans``
-    (oracle-replicable; collision odds negligible at eval-set scale).
+    keyed by the already-co-partitioned doc id. ``broadcast`` and
+    ``broadcast_max_digests`` follow the family's size-checked
+    contract (``"auto"`` by default; see ``_resolve_broadcast``).
     Corpus docs shorter than k tokens have n_grams 0 and are never
     contaminated."""
     if k < 1 or min_hits < 1:
         raise ValueError("k must be >= 1 and min_hits >= 1")
-    if broadcast not in (True, False, "auto"):
-        raise ValueError(
-            f"broadcast={broadcast!r}: expected True, False or 'auto'"
-        )
-    bench_d = _bench_gram_digests(benchmark, text_col, k)
-    if broadcast == "auto":
-        bench_d = bench_d.transform(materialize)
-        broadcast = bench_d.count() <= broadcast_max_digests
+    bench_d, broadcast = _resolve_broadcast(
+        _gram_digests(benchmark, text_col, k), broadcast, broadcast_max_digests
+    )
     return _contamination_probe(
         corpus, bench_d, text_col, id_col, k, min_hits, broadcast,
         num_partitions,
-    )
-
-
-def _gram_digest(g) -> Column:
-    """The decontamination family's 60-bit ANSI md5-prefix digest —
-    shared by the batch flag/cut operators and the streaming filter so
-    every flavor probes the identical digest domain."""
-    return F.conv(F.substring(F.md5(g), 1, 15), 16, 10).cast("bigint")
-
-
-def _bench_gram_digests(benchmark: DataFrame, text_col: str, k: int) -> DataFrame:
-    """Distinct k-gram digests of the evaluation set — the bounded
-    probe side of every decontamination flavor."""
-    return (
-        benchmark.select(words(text_col).alias("__w"))
-        .filter(F.size("__w") >= k)
-        .select(F.explode(word_shingles(F.col("__w"), k)).alias("__g"))
-        .select(_gram_digest(F.col("__g")).alias("__d"))
-        .distinct()
     )
 
 
@@ -1756,39 +1726,13 @@ def _contamination_probe(
     two consumers of the repartitioned base did not share the
     exchange, so the tokenized corpus shuffled TWICE (measured by the
     honest consume() probe: 107 MB vs 53 MB of corpus at x30). Now
-    every doc rides the gram stream exactly once: sub-k docs
-    contribute one null row via ``explode_outer`` (a null digest never
-    matches the probe), per-doc n_grams travels arithmetically beside
-    the grams, and ONE doc-keyed aggregation produces the full
+    ONE doc-keyed aggregation over ``_probe_rows`` produces the full
     contract — count of matched positions AND the fill-in zeros —
     with zero joins after the broadcast probe. The groupBy reuses the
     repartition's partitioning, so the corpus text crosses the wire
-    at most once.
-
-    ``num_partitions=0`` skips the corpus repartition entirely — the
-    cluster-scale setting, where scan splits already provide
-    parallelism and the only exchange left is the per-doc partial-agg
-    rows (bytes ~ docs, not corpus text). The default (None -> local
-    core count) keeps single-file local runs parallel."""
-    base = corpus.select(
-        F.col(id_col).alias("__id"), F.col(text_col).alias("__t")
-    )
-    if num_partitions != 0:
-        n_part = num_partitions or exchange_width(corpus)
-        base = base.repartition(n_part, "__id")
-    # tokenize AFTER the conditional exchange (opt r17): the regex
-    # pass runs at n_part on the spread path; identical plan when
-    # num_partitions=0
-    base = base.select("__id", words("__t").alias("__w"))
-    rows = base.select(
-        "__id",
-        F.greatest(F.size("__w") - F.lit(k - 1), F.lit(0))
-        .cast("bigint")
-        .alias("__n"),
-        F.explode_outer(
-            F.when(F.size("__w") >= k, word_shingles(F.col("__w"), k))
-        ).alias("__g"),
-    ).select("__id", "__n", _gram_digest(F.col("__g")).alias("__d"))
+    at most once; with ``num_partitions=0`` the only exchange left is
+    the per-doc partial-agg rows (bytes ~ docs, not corpus text)."""
+    rows = _probe_rows(corpus, text_col, id_col, k, num_partitions)
     marked = bench_d.withColumn("__m", F.lit(1))
     probed = rows.join(
         F.broadcast(marked) if broadcast else marked, "__d", "left"
@@ -1805,24 +1749,6 @@ def _contamination_probe(
             F.col("__h").alias("k_gram_hits"),
             (F.col("__h") >= min_hits).alias("contaminated"),
         )
-    )
-
-
-def _bench_set_gram_digests(
-    benchmarks: DataFrame, text_col: str, set_col: str, k: int
-) -> DataFrame:
-    """Distinct (set, k-gram digest) pairs of a labeled benchmark
-    SUITE — the bounded probe side of the multi-benchmark flavors
-    (set stringified so attribution sorting is engine-neutral)."""
-    return (
-        benchmarks.select(
-            F.col(set_col).cast("string").alias("__s"),
-            words(text_col).alias("__w"),
-        )
-        .filter(F.size("__w") >= k)
-        .select("__s", F.explode(word_shingles(F.col("__w"), k)).alias("__g"))
-        .select("__s", _gram_digest(F.col("__g")).alias("__d"))
-        .distinct()
     )
 
 
@@ -1843,8 +1769,7 @@ def _multi_contamination_probe(
     pattern, widened to per-set attribution).
 
     Single-aggregation shape (the r14 flag-rewrite contract — zero
-    joins after the broadcast probe): every doc rides the positional
-    gram stream exactly once via ``explode_outer``; the LEFT join
+    joins after the broadcast probe) over ``_probe_rows``: the LEFT join
     against the per-set digests emits unmatched positions once with a
     null set and matched positions once PER MATCHING SET, so the
     distinct matched-position count needs no countDistinct —
@@ -1852,25 +1777,7 @@ def _multi_contamination_probe(
     per-(doc, set) group sizes ARE the attribution hit counts. Two
     chained doc-keyed aggregations ride one partitioning; the rows
     entering the second are (docs x sets)-bounded."""
-    base = corpus.select(
-        F.col(id_col).alias("__id"), F.col(text_col).alias("__t")
-    )
-    if num_partitions != 0:
-        n_part = num_partitions or exchange_width(corpus)
-        base = base.repartition(n_part, "__id")
-    # tokenize AFTER the conditional exchange (opt r17): the regex
-    # pass runs at n_part on the spread path; identical plan when
-    # num_partitions=0
-    base = base.select("__id", words("__t").alias("__w"))
-    rows = base.select(
-        "__id",
-        F.greatest(F.size("__w") - F.lit(k - 1), F.lit(0))
-        .cast("bigint")
-        .alias("__n"),
-        F.explode_outer(
-            F.when(F.size("__w") >= k, word_shingles(F.col("__w"), k))
-        ).alias("__g"),
-    ).select("__id", "__n", _gram_digest(F.col("__g")).alias("__d"))
+    rows = _probe_rows(corpus, text_col, id_col, k, num_partitions)
     probed = rows.join(
         F.broadcast(bench_g) if broadcast else bench_g, "__d", "left"
     )
@@ -1955,14 +1862,13 @@ def multi_benchmark_contamination(
     riding one partitioning (see ``_multi_contamination_probe``)."""
     if k < 1 or min_hits < 1:
         raise ValueError("k must be >= 1 and min_hits >= 1")
-    if broadcast not in (True, False, "auto"):
-        raise ValueError(
-            f"broadcast={broadcast!r}: expected True, False or 'auto'"
-        )
-    bench_g = _bench_set_gram_digests(benchmarks, text_col, set_col, k)
-    if broadcast == "auto":
-        bench_g = bench_g.transform(materialize)
-        broadcast = bench_g.count() <= broadcast_max_digests
+    bench_g, broadcast = _resolve_broadcast(
+        _gram_digests(
+            benchmarks, text_col, k, F.col(set_col).cast("string").alias("__s")
+        ),
+        broadcast,
+        broadcast_max_digests,
+    )
     return _multi_contamination_probe(
         corpus, bench_g, text_col, id_col, k, min_hits, broadcast,
         num_partitions,
@@ -2019,52 +1925,22 @@ def multi_benchmark_leak_report(
     md5-prefix digest as the rest of the family."""
     if k < 1:
         raise ValueError("k must be >= 1")
-    if broadcast not in (True, False, "auto"):
-        raise ValueError(
-            f"broadcast={broadcast!r}: expected True, False or 'auto'"
-        )
     # (__bid, __d) WITHOUT the set label: every consumer here (probe
     # join, per-item totals, size check) keys by item, and the report
     # re-attaches the label from all_items at the end — so an item
     # listed under two set labels contributes its digests ONCE
     # (keeping the per-set label in this distinct would double-count
     # n_distinct_grams for such items, ADVICE r16)
-    bench_g = (
-        benchmarks.select(
-            F.col(id_col).alias("__bid"),
-            words(text_col).alias("__w"),
-        )
-        .filter(F.size("__w") >= k)
-        .select(
-            "__bid",
-            F.explode(word_shingles(F.col("__w"), k)).alias("__g"),
-        )
-        .select("__bid", _gram_digest(F.col("__g")).alias("__d"))
-        .distinct()
-        # multi-consumer staging (probe join + per-item totals + the
-        # auto size check); eager=False keeps construction lazy
-        # (parquet checkpoint mode excepted — see materialize())
-        .transform(materialize, eager=False)
+    bench_g, broadcast = _resolve_broadcast(
+        _gram_digests(benchmarks, text_col, k, F.col(id_col).alias("__bid")),
+        broadcast,
+        broadcast_max_digests,
+        multi_consumer=True,
     )
-    if broadcast == "auto":
-        broadcast = bench_g.count() <= broadcast_max_digests
-    corp = corpus.select(
-        F.col(id_col).alias("__cid"), F.col(text_col).alias("__t")
-    )
-    if num_partitions != 0:
-        # local parallelism aid only (the downstream aggs key by
-        # benchmark item); num_partitions=0 skips it — cluster mode,
-        # corpus text never on the wire
-        n_part = num_partitions or exchange_width(corpus)
-        corp = corp.repartition(n_part, "__cid")
-    # tokenize AFTER the conditional exchange (opt r17): the regex
-    # pass runs at n_part on the spread path; identical plan when
-    # num_partitions=0
-    corp = corp.select("__cid", words("__t").alias("__w"))
-    grams = (
-        corp.filter(F.size("__w") >= k)
-        .select("__cid", F.explode(word_shingles(F.col("__w"), k)).alias("__g"))
-        .select("__cid", _gram_digest(F.col("__g")).alias("__d"))
+    # the downstream aggs key by benchmark item: the doc-keyed
+    # exchange is a local parallelism aid only
+    grams = _gram_stream(
+        _doc_tokens(corpus, text_col, id_col, "__cid", num_partitions), k, "__cid"
     )
     # distinct (item, corpus doc, digest) triples — the per-pair hit
     # table both rollups read; staged once (leak-volume-sized). The
@@ -2678,24 +2554,11 @@ def _minhash_sig_base(
         F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast("bigint"),
         F.lit(_MH_PRIME),
     )
-    # tokenize AFTER the id exchange (opt r17, guide §2.5): words() on
-    # the scan side serializes the regex tokenization onto the scan's
-    # partitions (one row group at small SF = one task); raw text
-    # crosses the exchange (fewer bytes than the word array) and the
-    # tokenize+shingle+digest chain runs at the operator's parallelism.
-    # The two-step select stays un-collapsed (words() is multiply
-    # referenced inside the shingle HOF, so CollapseProject keeps it an
-    # attribute — verified against the optimized plan).
-    shingled = (
-        df.select(F.col(id_col).alias("__id"), F.col(text_col).alias("__t"))
-        .repartition(n_part, "__id")
-        .select("__id", words("__t").alias("__w"))
-        .select(
-            "__id",
-            F.array_distinct(
-                F.transform(word_shingles("__w", shingle_n), digest)
-            ).alias("__sh"),
-        )
+    shingled = _doc_tokens(df, text_col, id_col, "__id", n_part).select(
+        "__id",
+        F.array_distinct(
+            F.transform(word_shingles("__w", shingle_n), digest)
+        ).alias("__sh"),
     )
     sig_udf = _np_minhash_udf(num_hashes)
     return shingled.select(
@@ -3079,133 +2942,49 @@ def ngram_containment_pairs(
     forwards (num_hashes, bands, hasher) to the routed path;
     ``candidate_budget=None`` skips the estimate entirely (the
     default plan is unchanged)."""
-    if budget_action not in ("warn", "error", "minhash"):
-        raise ValueError(
-            f"budget_action={budget_action!r}: expected 'warn', 'error' or 'minhash'"
-        )
+    _check_budget_action(budget_action)
     n_part = num_partitions or exchange_width(df)
-    # tokenize AFTER the id exchange — same rationale and
-    # CollapseProject-safety argument as ngram_jaccard_pairs (opt r17)
-    base = (
-        df.select(F.col(id_col).alias("__id"), F.col(text_col).alias("__t"))
-        .repartition(n_part, "__id")
-        .select(
-            "__id", words("__t").alias("__w")
-        )
-        .select(
-            "__id", F.array_distinct(word_shingles("__w", shingle_n)).alias("__sh")
-        )
-        # __shh/__nh: per-doc digest arrays for the verify prefilter,
-        # computed once at the materialize — see ngram_jaccard_pairs
-        .select(
-            "__id", "__sh", F.transform("__sh", lambda s: F.xxhash64(s)).alias("__shh")
-        )
-        .withColumn("__nh", F.size(F.array_distinct("__shh")))
-        .transform(materialize)
+    base = _shingle_base(df, text_col, id_col, shingle_n, n_part)
+    posting, prefix = _prefix_postings(
+        base, threshold, n_part, "__id", "shingle", "df_"
     )
-    # 64-bit shingle digests on the posting/prefix path — same lossless
-    # argument as ngram_jaccard_pairs (any consistent total order keeps
-    # the prefix filter exact; collisions only widen the candidate
-    # superset; containment is verified on the full string sets). The
-    # digests come precomputed off the checkpoint (__shh positionally
-    # parallel to __sh — explode yields the identical multiset).
-    posting = base.select(
-        "__id", F.size("__sh").alias("__n"), F.explode("__shh").alias("shingle")
-    )
-    freq = posting.groupBy("shingle").agg(F.count(F.lit(1)).alias("df_"))
-    # pin the rank-window exchange (opt r18, same anti-coalesce
-    # rationale as the r17 verify pin): the window requires
-    # hashpartitioning(__id); left to EnsureRequirements, AQE
-    # byte-coalesced the ~4 MB exchange to 3 partitions and serialized
-    # the rank + prefix filter + candidate-feed stage onto 3 cores
-    # (profiled ~0.8 s run over 3 tasks inside canonical_docs). The
-    # explicit same-key repartition satisfies the window's
-    # ClusteredDistribution, so the exchange COUNT is unchanged — it
-    # is just AQE-exempt and runs at the operator's width.
-    ranked = posting.join(freq, "shingle").repartition(
-        n_part, "__id"
-    ).withColumn(
-        "__rk",
-        F.row_number().over(
-            Window.partitionBy("__id").orderBy(
-                F.col("df_").asc(), F.col("shingle").asc()
-            )
+    prefix, routed = _budget_route(
+        prefix, candidate_budget, budget_action, stats,
+        "ngram_containment_pairs",
+        lambda p: p.agg(F.sum(F.col("df_") - 1).cast("bigint").alias("__est")),
+        "containment_lsh_pairs",
+        lambda: containment_lsh_pairs(
+            df,
+            text_col,
+            id_col,
+            shingle_n=shingle_n,
+            containment_threshold=threshold,
+            num_partitions=num_partitions,
+            **(route_kwargs or {}),
         ),
     )
-    prefix_len = (
-        F.col("__n")
-        - F.ceil(F.lit(threshold) * F.col("__n") - F.lit(1e-9)).cast("int")
-        + F.lit(1)
-    )
-    prefix_rows = ranked.filter(F.col("__rk") <= prefix_len).select(
-        "__id", "shingle", "df_"
-    )
-    if candidate_budget is not None:
-        prefix_rows = prefix_rows.transform(materialize)
-        est_row = (
-            prefix_rows.agg(
-                F.sum(F.col("df_") - 1).cast("bigint").alias("__est")
-            ).collect()
-        )
-        est = int(est_row[0]["__est"] or 0)
-        if _candidate_budget_gate(
-            "ngram_containment_pairs", est, candidate_budget, budget_action,
-            stats, "containment_lsh_pairs",
-        ):
-            return containment_lsh_pairs(
-                df,
-                text_col,
-                id_col,
-                shingle_n=shingle_n,
-                containment_threshold=threshold,
-                num_partitions=num_partitions,
-                **(route_kwargs or {}),
-            )
-    prefix_a = prefix_rows.select("__id", "shingle")
+    if routed is not None:
+        return routed
     cand = (
-        prefix_a.alias("x")
+        prefix.select("__id", "shingle").alias("x")
         .join(posting.select("__id", "shingle").alias("y"), "shingle")
         .filter(F.col("x.__id") != F.col("y.__id"))
         .select(F.col("x.__id").alias("id_a"), F.col("y.__id").alias("id_b"))
-        .dropDuplicates(["id_a", "id_b"])
-        # verify-stage parallelism: same rationale as the Jaccard join
-        # (per-pair CPU, byte-based AQE coalescing starves it — the
-        # containment verify measured 8.4 s of CPU on 5 AQE-coalesced
-        # tasks at sf0.1); user repartition pins the verify stage at
-        # the operator's parallelism after the partial-dedup exchange.
-        # xxhash64 key: a raw (id_a, id_b) repartition is elided as
-        # redundant against the dedup exchange's identical partitioning
-        # and the stage collapses back to one AQE-coalesced partition
-        .repartition(n_part, F.xxhash64(F.col("id_a"), F.col("id_b")))
     )
-    sh = base.select(
-        "__id", "__sh", "__shh", "__nh", F.size("__sh").alias("__n")
-    )
-    joined = cand.join(
-        sh.toDF("id_a", "sh_a", "shh_a", "nh_a", "n_a"), "id_a"
-    ).join(sh.toDF("id_b", "sh_b", "shh_b", "nh_b", "n_b"), "id_b")
-    # Digest prefilter, containment form (opt r18 — exact, see
-    # ngram_jaccard_pairs for the injectivity argument): with no
-    # within-doc collisions |h(A) ∩ h(B)| = |A ∩ B| + c, c >= 0, and
-    # |h(A)| = |A|, so hash containment >= string containment. The
-    # 1e-6 slack covers the 6-digit rounding of the declared value
-    # (round(x, 6) >= t requires x >= t - 5e-7) plus double rounding;
-    # a dropped pair is provably below threshold AFTER rounding.
-    # 99.9% of candidates fail verify at sf0.1 — they now pay one
-    # long-array intersect instead of a string set-op.
+    # with no within-doc collisions |h(A)| = |A|, so hash containment
+    # >= string containment; the 1e-6 slack covers the 6-digit rounding
+    # of the declared value (round(x, 6) >= t requires x >= t - 5e-7)
+    # plus double rounding, so a dropped pair is provably below
+    # threshold AFTER rounding
     inter_h = F.size(F.array_intersect("shh_a", "shh_b"))
-    prefilter = (
-        (F.col("nh_a") < F.col("n_a"))
-        | (F.col("nh_b") < F.col("n_b"))
-        | (inter_h / F.col("nh_a") >= F.lit(threshold) - F.lit(1e-6))
-    )
-    cont = F.round(
-        F.size(F.array_intersect("sh_a", "sh_b")) / F.col("n_a"), 6
-    )
-    return (
-        joined.filter(prefilter)
-        .select("id_a", "id_b", cont.alias("containment"))
-        .filter(F.col("containment") >= threshold)
+    return _verify_pairs(
+        cand,
+        base,
+        n_part,
+        inter_h / F.col("nh_a") >= F.lit(threshold) - F.lit(1e-6),
+        "containment",
+        F.round(F.size(F.array_intersect("sh_a", "sh_b")) / F.col("n_a"), 6),
+        threshold,
     )
 
 

@@ -160,8 +160,11 @@ class _Compiler:
             raise FilterDSLError(f"no key registered for subquery target {target!r}")
         fk = spec.get("on", prop)
         inner = _Compiler(linked, self.tables, self.keys)
+        predicate = inner.compile(spec.get("filters"))
+        # filter inner.df, not linked: a nested link subquery joins its
+        # marker column onto inner.df, and the predicate refers to it
         key_set = (
-            linked.filter(inner.compile(spec.get("filters")))
+            inner.df.filter(predicate)
             .select(F.col(pk).alias(f"__sq_key_{self._n_sub}"))
             .distinct()
         )

@@ -10,8 +10,16 @@ map side with no shuffle.
 from __future__ import annotations
 
 import os
+from pathlib import Path
 
 from pyspark.sql import SparkSession
+
+# Directory holding the graphkb_spark package. Python workers unpickle
+# module-level UDFs (pandas UDFs such as hgvs.parse_variant_udf) by
+# importing the package, so it goes on their PYTHONPATH: without it a
+# driver whose cwd is not the repo root fails in the workers with
+# ModuleNotFoundError.
+_PACKAGE_PARENT = str(Path(__file__).resolve().parent.parent)
 
 
 def get_spark(app_name: str = "graphkb_spark", cpus: int | None = None) -> SparkSession:
@@ -30,6 +38,7 @@ def get_spark(app_name: str = "graphkb_spark", cpus: int | None = None) -> Spark
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
         .config("spark.ui.enabled", "false")
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
         # testdata parquet carries TIMESTAMP(NANOS) which vanilla Spark
         # rejects; read as long and convert in load_tables

@@ -717,8 +717,9 @@ def streaming_decontaminate(
     import tempfile
 
     from graphkb_spark.operators.dedup import (
-        _bench_gram_digests,
         _contamination_probe,
+        _gram_digests,
+        _resolve_broadcast,
     )
 
     stage_dir = stage_dir or tempfile.mkdtemp(prefix=f"gks_{query_name}_")
@@ -729,8 +730,9 @@ def streaming_decontaminate(
     # broadcast decision and checkpointed so micro-batches share the
     # computed digest table instead of re-tokenizing the benchmark
     # per trigger
-    bench_d = _bench_gram_digests(benchmark, text_col, k).transform(materialize)
-    broadcast = bench_d.count() <= broadcast_max_digests
+    bench_d, broadcast = _resolve_broadcast(
+        _gram_digests(benchmark, text_col, k), "auto", broadcast_max_digests
+    )
     # ---- arrival simulator: id-ordered range files, ascending mtimes
     w = Window.partitionBy(F.lit(1)).orderBy(F.col("__did").asc())
     staged = docs.withColumn("__bk", F.ntile(n_batches).over(w))
@@ -815,18 +817,22 @@ def streaming_multi_decontaminate(
     import tempfile
 
     from graphkb_spark.operators.dedup import (
-        _bench_set_gram_digests,
+        _gram_digests,
         _multi_contamination_probe,
+        _resolve_broadcast,
     )
 
     stage_dir = stage_dir or tempfile.mkdtemp(prefix=f"gks_{query_name}_")
     docs = normalize_ntz(docs).select(
         F.col(id_col).alias("__did"), F.col(text_col).alias("__text")
     )
-    bench_g = _bench_set_gram_digests(
-        benchmarks, text_col, set_col, k
-    ).transform(materialize)
-    broadcast = bench_g.count() <= broadcast_max_digests
+    bench_g, broadcast = _resolve_broadcast(
+        _gram_digests(
+            benchmarks, text_col, k, F.col(set_col).cast("string").alias("__s")
+        ),
+        "auto",
+        broadcast_max_digests,
+    )
     # ---- arrival simulator: id-ordered range files, ascending mtimes
     w = Window.partitionBy(F.lit(1)).orderBy(F.col("__did").asc())
     staged = docs.withColumn("__bk", F.ntile(n_batches).over(w))

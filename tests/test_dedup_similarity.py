@@ -61,14 +61,17 @@ def test_ngram_jaccard_matches_bruteforce(spark, docs):
 
 @pytest.mark.parametrize("threshold", [0.3, 0.5, 0.7, 0.75, 0.8, 1.0])
 def test_ngram_jaccard_filters_lossless(spark, threshold):
-    """VERDICT r10 #1 done-criterion: the PPJoin length + positional
-    filters must be lossless. A 40-doc corpus drawn from a 12-word
-    vocabulary makes every posting list long (the worst case the
-    filters exist for) and produces many doc pairs straddling each
-    threshold; doc lengths 4..14 hit integral t*n for t in
+    """VERDICT r10 #1 done-criterion: the PPJoin prefix, length and
+    positional filters must be lossless, for the Jaccard join and the
+    containment join built from the same stages. A 40-doc corpus drawn
+    from a 12-word vocabulary makes every posting list long (the worst
+    case the filters exist for) and produces many doc pairs straddling
+    each threshold; doc lengths 4..14 hit integral t*n for t in
     {0.5, 0.75, 0.8, 1.0} (the float-rounding edge the epsilon
     guards). Output must equal brute force exactly at every t."""
     import random
+
+    from graphkb_spark.operators.dedup import ngram_containment_pairs
 
     rng = random.Random(42)
     vocab = [f"w{i}" for i in range(12)]
@@ -84,6 +87,96 @@ def test_ngram_jaccard_filters_lossless(spark, threshold):
         ).collect()
     }
     assert got == brute_jaccard_pairs(spark, corpus, 2, threshold)
+    contained = {
+        (r.id_a, r.id_b): r.containment
+        for r in ngram_containment_pairs(
+            corpus, "text", "doc_id", 2, threshold
+        ).collect()
+    }
+    assert contained == brute_containment_pairs(spark, corpus, 2, threshold)
+
+
+def test_ppjoin_lossless_under_digest_collisions(spark):
+    """Property (hypothesis, VERDICT r18 #5): the PPJoin stages stay
+    exact when the per-doc shingle digests collide. The base's __shh
+    digests come from a drawn table over the 64 possible bigrams
+    (values in 0..63, so collisions are common), which makes distinct
+    shingles share a digest across docs (inflating the hash-domain
+    overlap the verify prefilter bounds) and within one doc (shrinking
+    it, so such rows must pass the prefilter unconditionally). The
+    pinned examples collide two SHARED bigrams inside each doc: the
+    hash-domain Jaccard (1/3) and containment (1/2) fall below the
+    string values (1/2, 2/3) and below t. No pair whose string Jaccard or
+    containment reaches t may be dropped: both joins must equal brute
+    force."""
+    from hypothesis import example, given, settings
+    from hypothesis import strategies as st
+
+    from graphkb_spark.operators import dedup
+
+    real_base = dedup._shingle_base
+    vocab = [f"w{i}" for i in range(8)]
+    bigrams = [f"{a} {b}" for a in vocab for b in vocab]
+
+    def colliding_base(digests):
+        table = F.create_map(
+            *[F.lit(x) for g, d in zip(bigrams, digests) for x in (g, d)]
+        )
+
+        def build(*args):
+            return (
+                real_base(*args)
+                .select(
+                    "__id",
+                    "__sh",
+                    F.transform(
+                        "__sh", lambda s: F.element_at(table, s).cast("bigint")
+                    ).alias("__shh"),
+                )
+                .withColumn("__nh", F.size(F.array_distinct("__shh")))
+            )
+
+        return build
+
+    # "w0 w1" (index 1) and "w1 w2" (index 10) share digest 1
+    pinned = list(range(64))
+    pinned[10] = 1
+
+    @settings(max_examples=6, deadline=None)
+    @given(
+        st.lists(
+            st.lists(st.integers(0, 7), min_size=3, max_size=12),
+            min_size=2,
+            max_size=12,
+        ),
+        st.lists(st.integers(0, 63), min_size=64, max_size=64),
+        st.sampled_from([0.3, 0.5, 0.6, 0.75, 1.0]),
+    )
+    @example(docs=[[0, 1, 2, 3], [0, 1, 2, 4]], digests=pinned, t=0.5)
+    @example(docs=[[0, 1, 2, 3], [0, 1, 2, 4]], digests=pinned, t=0.6)
+    def inner(docs, digests, t):
+        rows = [
+            (i, " ".join(vocab[w] for w in ws)) for i, ws in enumerate(docs)
+        ]
+        corpus = spark.createDataFrame(rows, ["doc_id", "text"])
+        with pytest.MonkeyPatch.context() as mp:
+            mp.setattr(dedup, "_shingle_base", colliding_base(digests))
+            jac = {
+                (r.id_a, r.id_b)
+                for r in dedup.ngram_jaccard_pairs(
+                    corpus, "text", "doc_id", 2, t
+                ).collect()
+            }
+            cont = {
+                (r.id_a, r.id_b): r.containment
+                for r in dedup.ngram_containment_pairs(
+                    corpus, "text", "doc_id", 2, t
+                ).collect()
+            }
+        assert jac == brute_jaccard_pairs(spark, corpus, 2, t)
+        assert cont == brute_containment_pairs(spark, corpus, 2, t)
+
+    inner()
 
 
 class TestCandidateBudgetGuard:

@@ -61,6 +61,29 @@ def test_link_subquery(tables):
     assert ids(compile_filters(tables["people"], f2, tables, {"countries": "code"})) == [4]
 
 
+def test_nested_link_subquery(spark, tables):
+    """A link subquery inside another subquery's filters: the inner
+    predicate reads the marker column joined onto the linked table."""
+    continents = spark.createDataFrame(
+        [("americas", "west"), ("europe", "east")], ["cname", "side"]
+    )
+    tbls = {**tables, "continents": continents}
+    keys = {"countries": "code", "continents": "cname"}
+
+    def by_side(side):
+        return {"target": "continents", "filters": {"side": side}}
+
+    f = {"country": {"target": "countries",
+                     "filters": {"continent": by_side("east")}}}
+    assert ids(compile_filters(tables["people"], f, tbls, keys)) == [4]
+    f2 = {"country": {"target": "countries", "filters": {"AND": [
+        {"code": {"operator": "!=", "value": "CA"}},
+        {"continent": by_side("west")},
+    ]}}}
+    assert ids(compile_filters(tables["people"], f2, tbls, keys)) == [1, 3]
+    assert ids(compile_filters(tables["people"], {"NOT": f2}, tbls, keys)) == [2, 4]
+
+
 def test_run_query_envelope(tables):
     q = {
         "target": "people",

@@ -65,6 +65,11 @@ def test_vocabulary_query_prefers_non_deprecated(spark, kb):
     assert hit[RESOLVE_ERROR_COL] is None
     assert hit.sourceId == "v1"  # not the deprecated v4
     assert got["unknown term"][RESOLVE_ERROR_COL] == "not found"
+    # one `name` column: selecting it is not ambiguous
+    assert sorted(r.name for r in out.select("name").collect()) == [
+        "Resistance",
+        "unknown term",
+    ]
 
 
 def test_dsl_query_over_kb(kb):

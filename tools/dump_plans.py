@@ -21,6 +21,7 @@ stays separate.
 
 from __future__ import annotations
 
+import argparse
 import sys
 from pathlib import Path
 
@@ -32,22 +33,22 @@ from graphkb_spark.session import get_spark
 
 
 def main() -> None:
-    args = [a for a in sys.argv[1:]]
-    nockpt = "--nockpt" in args
-    if nockpt:
-        args.remove("--nockpt")
-    rnd = "r18"
-    if "--round" in args:
-        i = args.index("--round")
-        rnd = args[i + 1]
-        del args[i : i + 2]
-    tag = args[0]
-    names = args[1:] or HEADLINE
+    ap = argparse.ArgumentParser(
+        description="Dump formatted physical plans to plans/<round>/."
+    )
+    ap.add_argument("tag", metavar="TAG", help="file label, e.g. before/after")
+    ap.add_argument("queries", nargs="*", metavar="QUERY",
+                    help="queries() names (default: every bench.py HEADLINE query)")
+    ap.add_argument("--round", default="r18", help="output subdirectory (default r18)")
+    ap.add_argument("--nockpt", action="store_true",
+                    help="short-circuit materialize() to show the full lineage")
+    args = ap.parse_intermixed_args()
+    names = args.queries or HEADLINE
     sf_dir = "/root/testdata/sf0.1"
-    out_dir = Path(__file__).resolve().parent.parent / "plans" / rnd
+    out_dir = Path(__file__).resolve().parent.parent / "plans" / args.round
     out_dir.mkdir(parents=True, exist_ok=True)
     spark = get_spark("dump_plans")
-    if nockpt:
+    if args.nockpt:
         spark.conf.set("spark.graphkb.checkpoint.mode", "none")
     queries = entrymod.queries()
     for name in names:
@@ -55,7 +56,7 @@ def main() -> None:
         plan = df._sc._jvm.PythonSQLUtils.explainString(
             df._jdf.queryExecution(), "formatted"
         )
-        suffix = f"{name}_{tag}_full.txt" if nockpt else f"{name}_{tag}.txt"
+        suffix = f"{name}_{args.tag}_full.txt" if args.nockpt else f"{name}_{args.tag}.txt"
         (out_dir / suffix).write_text(plan)
         print(f"wrote {name} ({len(plan)} chars)")
     spark.stop()
