@@ -105,7 +105,13 @@ def materialize(df: DataFrame, eager: bool = True) -> DataFrame:
         # dumping the full optimized shape needs the boundary gone.
         # NEVER set this mode for execution — iterative operators rely
         # on materialize() to cut lineage and to compute multi-consumer
-        # stages once; without it their plans double per round.
+        # stages once; without it their plans double per round. Worse,
+        # materialize() is also a correctness pin: executing in this
+        # mode can return WRONG results, not just larger plans.
+        # sorted_neighborhood_pairs relies on it to freeze the sampled
+        # repartitionByRange boundaries, so every plan branch sees the
+        # same bucket ids; re-evaluated per branch, the sample can
+        # differ and pairs are silently lost or invented.
         return df
     if mode == "reliable":
         return df.checkpoint(eager=eager)

@@ -964,6 +964,16 @@ def _probe_rows(
     ).select("__id", "__n", _gram_digest(F.col("__g")).alias("__d"))
 
 
+# The reserved set column under which a single evaluation set runs as
+# the one-member suite of its multi-set twin; the single-set functions
+# project it (and the attribution columns) away.
+_ONE_SET = "__one_set"
+
+
+def _one_set(benchmark: DataFrame) -> DataFrame:
+    return benchmark.withColumn(_ONE_SET, F.lit(""))
+
+
 def repeated_spans(
     df: DataFrame,
     text_col: str,
@@ -1116,6 +1126,41 @@ def cut_repeated_spans(
     return _cut_spans(base, spans, id_col)
 
 
+def _cut_probe(
+    corpus: DataFrame,
+    benchmarks: DataFrame,
+    text_col: str,
+    id_col: str,
+    k: int,
+    num_partitions: int | None,
+    broadcast: bool | str,
+    broadcast_max_digests: int,
+    *key_cols: Column,
+) -> tuple[DataFrame, DataFrame]:
+    """The shared front half of the two benchmark cutters: ``(base,
+    matched)`` — the staged corpus tokens (__id, __w) and the corpus
+    positional gram stream joined to the benchmark digest table
+    (__d, __id, __p, *keys), keyed by ``key_cols`` beside each digest.
+    The digest side follows ``_resolve_broadcast``; the probe never
+    shuffles the corpus. Each cutter keeps its own plan after the
+    probe join (the multi cutter stages ``matched``, which would hide
+    the single cutter's probe broadcast inside the checkpoint)."""
+    if k < 1:
+        raise ValueError("k must be >= 1")
+    n_part = num_partitions or exchange_width(corpus)
+    bench_d, broadcast = _resolve_broadcast(
+        _gram_digests(benchmarks, text_col, k, *key_cols),
+        broadcast,
+        broadcast_max_digests,
+    )
+    # the checkpoint stores tokens, not raw text
+    base = _doc_tokens(corpus, text_col, id_col, "__id", n_part).transform(
+        materialize
+    )
+    grams = _gram_stream(base, k, "__id", positions=True)
+    return base, grams.join(F.broadcast(bench_d) if broadcast else bench_d, "__d")
+
+
 def cut_contaminated_spans(
     corpus: DataFrame,
     benchmark: DataFrame,
@@ -1146,21 +1191,11 @@ def cut_contaminated_spans(
     the only corpus-keyed exchanges are the island window and the
     span join-back, both on the already-co-partitioned doc id. Docs
     shorter than k tokens emit no grams and pass through uncut."""
-    if k < 1:
-        raise ValueError("k must be >= 1")
-    n_part = num_partitions or exchange_width(corpus)
-    bench_d, broadcast = _resolve_broadcast(
-        _gram_digests(benchmark, text_col, k), broadcast, broadcast_max_digests
+    base, matched = _cut_probe(
+        corpus, benchmark, text_col, id_col, k, num_partitions, broadcast,
+        broadcast_max_digests,
     )
-    # the checkpoint stores tokens, not raw text
-    base = _doc_tokens(corpus, text_col, id_col, "__id", n_part).transform(
-        materialize
-    )
-    grams = _gram_stream(base, k, "__id", positions=True)
-    pos = grams.join(
-        F.broadcast(bench_d) if broadcast else bench_d, "__d"
-    ).select("__id", "__p")
-    spans = _positions_to_spans(pos, id_col, k)
+    spans = _positions_to_spans(matched.select("__id", "__p"), id_col, k)
     return _cut_spans(base, spans, id_col)
 
 
@@ -1219,23 +1254,12 @@ def cut_multi_benchmark_spans(
     would cost an extra exchange to save leak x sets rows. Same
     60-bit ANSI md5-prefix digest as the rest of the family
     (oracle-replicable)."""
-    if k < 1:
-        raise ValueError("k must be >= 1")
-    n_part = num_partitions or exchange_width(corpus)
     # one data consumer: attribution reads the probe's OUTPUT, not the
     # digest table again
-    bench_g, broadcast = _resolve_broadcast(
-        _gram_digests(
-            benchmarks, text_col, k, F.col(set_col).cast("string").alias("__s")
-        ),
-        broadcast,
-        broadcast_max_digests,
+    base, matched = _cut_probe(
+        corpus, benchmarks, text_col, id_col, k, num_partitions, broadcast,
+        broadcast_max_digests, F.col(set_col).cast("string").alias("__s"),
     )
-    # the checkpoint stores tokens, not raw text
-    base = _doc_tokens(corpus, text_col, id_col, "__id", n_part).transform(
-        materialize
-    )
-    grams = _gram_stream(base, k, "__id", positions=True)
     # staged: TWO consumers (island window + attribution) read the
     # matched positions, and without the checkpoint each would replay
     # the corpus gram stream — the dominant scan+digest CPU — through
@@ -1243,10 +1267,8 @@ def cut_multi_benchmark_spans(
     # (matched positions x sets), not corpus-sized; eager=False keeps
     # construction lazy (parquet checkpoint mode excepted — its
     # staging write is inherently eager; see materialize())
-    matched = (
-        grams.join(F.broadcast(bench_g) if broadcast else bench_g, "__d")
-        .select("__id", "__p", "__s")
-        .transform(materialize, eager=False)
+    matched = matched.select("__id", "__p", "__s").transform(
+        materialize, eager=False
     )
     spans = _positions_to_spans(matched.select("__id", "__p"), id_col, k)
     attr = (
@@ -1309,81 +1331,19 @@ def benchmark_leak_report(
     fraction (6 decimals), and the any-leak flag. Benchmark docs
     shorter than k tokens report 0 grams and are never leaked.
 
-    Scale shape: the per-item digest table (bench doc, digest —
-    distinct) is the bounded side and follows the family's
-    size-checked ``broadcast="auto"`` contract; it is materialized
-    ONCE (it feeds the probe join, the per-item totals, and the auto
-    size check — three consumers, one tokenize+distinct job), and the
-    corpus gram stream probes it and never shuffles by key
-    (``num_partitions=0`` additionally skips the local-parallelism
-    corpus repartition, so at cluster scale the corpus text never
-    crosses the wire at all). The eval-bounded
-    fill-in joins broadcast only when the size check licensed
-    broadcasting the digests — an oversized benchmark falls back to
-    AQE planning everywhere, not just on the probe (ADVICE r13).
-    The per-item distinct counts
-    partial-aggregate map-side (Spark's Expand + partial-distinct
-    HashAggregate), so a boilerplate gram repeated millions of times
-    inside one corpus doc collapses to one (item, digest) /
-    (item, doc) key per map task before the shuffle. Same 60-bit
-    ANSI md5-prefix digest as the rest of the family
-    (oracle-replicable)."""
-    if k < 1:
-        raise ValueError("k must be >= 1")
-    # probe join AND per-item totals read the digest table
-    bench_g, broadcast = _resolve_broadcast(
-        _gram_digests(benchmark, text_col, k, F.col(id_col).alias("__bid")),
-        broadcast,
-        broadcast_max_digests,
-        multi_consumer=True,
-    )
-    # the downstream aggs key by BENCHMARK id, so the doc-keyed
-    # exchange is a local parallelism aid only (num_partitions=0 skips
-    # it; the only shuffle left is the map-side-collapsed per-item
-    # distincts)
-    grams = _gram_stream(
-        _doc_tokens(corpus, text_col, id_col, "__cid", num_partitions), k, "__cid"
-    )
-    matches = grams.join(
-        F.broadcast(bench_g) if broadcast else bench_g, "__d"
-    )
-    per_item = matches.groupBy("__bid").agg(
-        F.countDistinct("__d").cast("bigint").alias("leaked_grams"),
-        F.countDistinct("__cid").cast("bigint").alias("leaking_docs"),
-    )
-    totals = bench_g.groupBy("__bid").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_distinct_grams")
-    )
-    # fill-in join over ALL benchmark docs, including sub-k ones; the
-    # per-item aggregates are eval-set-bounded, so when the size check
-    # licensed broadcasting the digests it licenses these hints too —
-    # but when it DECLINED (oversized or swapped benchmark argument),
-    # forcing them would re-introduce the OOM the auto check exists to
-    # prevent (one row per benchmark doc), so the hints are gated on
-    # the same resolved decision and AQE plans the oversized case
-    # (ADVICE r13)
-    hint = F.broadcast if broadcast else (lambda d: d)
-    all_items = benchmark.select(F.col(id_col).alias("__bid")).distinct()
-    return (
-        all_items.join(hint(totals), "__bid", "left")
-        .join(hint(per_item), "__bid", "left")
-        .select(
-            F.col("__bid").alias(id_col),
-            F.coalesce("n_distinct_grams", F.lit(0)).alias("n_distinct_grams"),
-            F.coalesce("leaked_grams", F.lit(0)).alias("leaked_grams"),
-            F.coalesce("leaking_docs", F.lit(0)).alias("leaking_docs"),
-            F.when(
-                F.coalesce("n_distinct_grams", F.lit(0)) > 0,
-                F.round(
-                    F.coalesce("leaked_grams", F.lit(0))
-                    / F.col("n_distinct_grams"),
-                    6,
-                ),
-            )
-            .otherwise(F.lit(0.0))
-            .alias("leaked_frac"),
-            (F.coalesce("leaking_docs", F.lit(0)) >= 1).alias("leaked"),
-        )
+    N=1 call of ``multi_benchmark_leak_report`` (scale shape there);
+    projecting away its worst-document columns lets Catalyst drop
+    that unique-key fill-in join."""
+    return multi_benchmark_leak_report(
+        corpus, _one_set(benchmark), text_col, id_col, _ONE_SET, k,
+        num_partitions, broadcast, broadcast_max_digests,
+    ).select(
+        id_col,
+        "n_distinct_grams",
+        "leaked_grams",
+        "leaking_docs",
+        "leaked_frac",
+        "leaked",
     )
 
 
@@ -1409,53 +1369,13 @@ def benchmark_leak_spans(
     Returns (bench_id, <id_col>, span_start, span_end, span_tokens) —
     one row per maximal span, span indexes in the corpus doc's token
     coordinates (the ``repeated_spans`` contract), spans merged per
-    (item, doc) with the shared gaps-and-islands machinery
-    (``_positions_to_spans``: equal-length k-gram intervals merge
-    exactly when start_next <= start_prev + k).
+    (item, doc).
 
-    Scale shape: the per-item digest table (bench doc, digest —
-    distinct) follows the family's size-checked ``broadcast="auto"``
-    contract and is materialized before the auto count (staged-once,
-    VERDICT r13 #3); the corpus positional gram stream probes it and
-    never shuffles. The island merge is keyed by the (item, doc) pair
-    — finer than the doc-keyed exchange of ``cut_contaminated_spans``
-    but still output-bounded: only positions that actually matched an
-    eval gram reach the window, so the exchange is sized by the leak
-    volume, not the corpus (``num_partitions=0`` skips the
-    local-parallelism corpus repartition too — cluster mode). Same
-    60-bit ANSI md5-prefix digest as the rest of the family
-    (oracle-replicable)."""
-    if k < 1:
-        raise ValueError("k must be >= 1")
-    # one data consumer: the probe join
-    bench_g, broadcast = _resolve_broadcast(
-        _gram_digests(benchmark, text_col, k, F.col(id_col).alias("__bid")),
-        broadcast,
-        broadcast_max_digests,
-    )
-    # the island window keys by (item, doc), so the doc-keyed exchange
-    # is a local parallelism aid only (num_partitions=0 skips it; the
-    # window exchange carries matched positions only)
-    grams = _gram_stream(
-        _doc_tokens(corpus, text_col, id_col, "__cid", num_partitions),
-        k,
-        "__cid",
-        positions=True,
-    )
-    # one matched corpus position per (item, doc, p): the digest is a
-    # function of the position and bench_g is distinct per (item,
-    # digest), so the island input needs no dedup before the window
-    pos = grams.join(
-        F.broadcast(bench_g) if broadcast else bench_g, "__d"
-    ).select(F.struct("__bid", "__cid").alias("__id"), "__p")
-    spans = _positions_to_spans(pos, "__key", k)
-    return spans.select(
-        F.col("__key.__bid").alias("bench_id"),
-        F.col("__key.__cid").alias(id_col),
-        "span_start",
-        "span_end",
-        "span_tokens",
-    )
+    N=1 call of ``multi_benchmark_leak_spans`` (scale shape there)."""
+    return multi_benchmark_leak_spans(
+        corpus, _one_set(benchmark), text_col, id_col, _ONE_SET, k,
+        num_partitions, broadcast, broadcast_max_digests,
+    ).select("bench_id", id_col, "span_start", "span_end", "span_tokens")
 
 
 def multi_benchmark_leak_spans(
@@ -1485,16 +1405,17 @@ def multi_benchmark_leak_spans(
     ITS OWN set only — the set is the item's label, not a match
     attribute.
 
-    Scale shape: identical to ``benchmark_leak_spans`` with the set
-    label riding the (item, doc) island key (functionally dependent
-    on the item, so the window keys are unchanged in cardinality):
-    the suite digest table follows the size-checked
-    ``broadcast="auto"`` contract and is staged before the auto
-    count; the corpus positional gram stream probes it and never
-    shuffles corpus text (``num_partitions=0`` skips the
-    local-parallelism repartition — cluster mode); the island window
-    exchange carries only matched positions — leak-volume, not
-    corpus-volume."""
+    Scale shape: the suite (item, set, digest — distinct) table
+    follows the size-checked ``broadcast="auto"`` contract and is
+    staged before the auto count (staged-once, VERDICT r13 #3); the
+    corpus positional gram stream probes it and never shuffles corpus
+    text (``num_partitions=0`` skips the local-parallelism
+    repartition — cluster mode). The island merge is keyed by the
+    (item, set, doc) triple — the set label is functionally dependent
+    on the item, so the window keys keep the (item, doc) cardinality:
+    finer than the doc-keyed exchange of ``cut_contaminated_spans``
+    but output-bounded, since only positions that matched an eval
+    gram reach the window — leak-volume, not corpus-volume."""
     if k < 1:
         raise ValueError("k must be >= 1")
     # one data consumer: the probe join
@@ -1509,12 +1430,17 @@ def multi_benchmark_leak_spans(
         broadcast,
         broadcast_max_digests,
     )
+    # the island window keys by (item, set, doc), so the doc-keyed
+    # exchange is a local parallelism aid only
     grams = _gram_stream(
         _doc_tokens(corpus, text_col, id_col, "__cid", num_partitions),
         k,
         "__cid",
         positions=True,
     )
+    # one matched corpus position per (item, set, doc, p): the digest
+    # is a function of the position and bench_g is distinct per (item,
+    # set, digest), so the island input needs no dedup before the window
     pos = grams.join(
         F.broadcast(bench_g) if broadcast else bench_g, "__d"
     ).select(F.struct("__bid", "__set", "__cid").alias("__id"), "__p")
@@ -1683,73 +1609,15 @@ def exact_substring_contamination(
     shingle overlap FRACTION): the fraction test scores fuzzy overlap,
     this one trips on a single verbatim leaked passage regardless of
     document length. Returns one row per corpus doc: (id, n_grams,
-    k_gram_hits, contaminated).
+    k_gram_hits, contaminated). Corpus docs shorter than k tokens have
+    n_grams 0 and are never contaminated.
 
-    Scale shape: the benchmark's distinct gram digests are a bounded
-    side (eval sets are small by definition) — when broadcast, Spark
-    ships them into the probe join, so the corpus-side gram stream
-    never shuffles; the per-doc hit count partial-aggregates map-side
-    keyed by the already-co-partitioned doc id. ``broadcast`` and
-    ``broadcast_max_digests`` follow the family's size-checked
-    contract (``"auto"`` by default; see ``_resolve_broadcast``).
-    Corpus docs shorter than k tokens have n_grams 0 and are never
-    contaminated."""
-    if k < 1 or min_hits < 1:
-        raise ValueError("k must be >= 1 and min_hits >= 1")
-    bench_d, broadcast = _resolve_broadcast(
-        _gram_digests(benchmark, text_col, k), broadcast, broadcast_max_digests
-    )
-    return _contamination_probe(
-        corpus, bench_d, text_col, id_col, k, min_hits, broadcast,
-        num_partitions,
-    )
-
-
-def _contamination_probe(
-    corpus: DataFrame,
-    bench_d: DataFrame,
-    text_col: str,
-    id_col: str,
-    k: int,
-    min_hits: int,
-    broadcast: bool,
-    num_partitions: int | None = None,
-) -> DataFrame:
-    """The corpus-side probe of ``exact_substring_contamination``
-    against a prepared digest set — factored out so the streaming
-    filter reuses it per micro-batch with the broadcast decision made
-    ONCE up front.
-
-    Round-14 rewrite (single aggregation, no fill-in join): the r13
-    shape computed hits on the gram stream and LEFT-JOINED them back
-    onto the doc list, which cost a second pass over the corpus — the
-    two consumers of the repartitioned base did not share the
-    exchange, so the tokenized corpus shuffled TWICE (measured by the
-    honest consume() probe: 107 MB vs 53 MB of corpus at x30). Now
-    ONE doc-keyed aggregation over ``_probe_rows`` produces the full
-    contract — count of matched positions AND the fill-in zeros —
-    with zero joins after the broadcast probe. The groupBy reuses the
-    repartition's partitioning, so the corpus text crosses the wire
-    at most once; with ``num_partitions=0`` the only exchange left is
-    the per-doc partial-agg rows (bytes ~ docs, not corpus text)."""
-    rows = _probe_rows(corpus, text_col, id_col, k, num_partitions)
-    marked = bench_d.withColumn("__m", F.lit(1))
-    probed = rows.join(
-        F.broadcast(marked) if broadcast else marked, "__d", "left"
-    )
-    return (
-        probed.groupBy("__id")
-        .agg(
-            F.first("__n").alias("n_grams"),
-            F.sum(F.coalesce("__m", F.lit(0))).cast("bigint").alias("__h"),
-        )
-        .select(
-            F.col("__id").alias(id_col),
-            "n_grams",
-            F.col("__h").alias("k_gram_hits"),
-            (F.col("__h") >= min_hits).alias("contaminated"),
-        )
-    )
+    N=1 call of ``multi_benchmark_contamination`` (scale shape and the
+    ``broadcast`` contract are documented there)."""
+    return multi_benchmark_contamination(
+        corpus, _one_set(benchmark), text_col, id_col, _ONE_SET, k,
+        min_hits, num_partitions, broadcast, broadcast_max_digests,
+    ).select(id_col, "n_grams", "k_gram_hits", "contaminated")
 
 
 def _multi_contamination_probe(
@@ -1765,18 +1633,24 @@ def _multi_contamination_probe(
     """The corpus-side probe of ``multi_benchmark_contamination``
     against a prepared (set, digest) table — factored out so the
     streaming gate reuses it per micro-batch with the broadcast
-    decision made once up front (the ``_contamination_probe``
-    pattern, widened to per-set attribution).
+    decision made once up front.
 
-    Single-aggregation shape (the r14 flag-rewrite contract — zero
-    joins after the broadcast probe) over ``_probe_rows``: the LEFT join
-    against the per-set digests emits unmatched positions once with a
-    null set and matched positions once PER MATCHING SET, so the
-    distinct matched-position count needs no countDistinct —
+    Zero joins after the broadcast probe (the r14 flag rewrite): the
+    r13 shape computed hits on the gram stream and LEFT-JOINED them
+    back onto the doc list, which shuffled the tokenized corpus TWICE
+    (measured by the consume() probe: 107 MB vs 53 MB of corpus at
+    x30). Now doc-keyed aggregations over ``_probe_rows`` produce the
+    full contract, fill-in zeros included: the LEFT join against the
+    per-set digests emits unmatched positions once with a null set
+    and matched positions once PER MATCHING SET, so the distinct
+    matched-position count needs no countDistinct —
     ``k_gram_hits = n_grams - (unmatched positions)`` — and the
     per-(doc, set) group sizes ARE the attribution hit counts. Two
-    chained doc-keyed aggregations ride one partitioning; the rows
-    entering the second are (docs x sets)-bounded."""
+    chained doc-keyed aggregations ride the repartition's one
+    partitioning, so the corpus text crosses the wire at most once;
+    the rows entering the second are (docs x sets)-bounded, and with
+    ``num_partitions=0`` the only exchange left is the per-(doc, set)
+    partial-agg rows (bytes ~ docs, not corpus text)."""
     rows = _probe_rows(corpus, text_col, id_col, k, num_partitions)
     probed = rows.join(
         F.broadcast(bench_g) if broadcast else bench_g, "__d", "left"
@@ -1905,9 +1779,9 @@ def multi_benchmark_leak_report(
     document a forensic audit should read. Items shorter than k
     tokens report 0 grams and are never leaked.
 
-    Scale shape: the per-item (set, item, digest) table is the
-    bounded side and follows the family's size-checked
-    ``broadcast="auto"`` contract (staged once — probe join,
+    Scale shape: the per-item (item, digest — distinct, set-label
+    free) table is the bounded side and follows the family's
+    size-checked ``broadcast="auto"`` contract (staged once — probe join,
     per-item totals, and the auto size check all read the staging
     table; eager=False keeps construction lazy, parquet checkpoint
     mode excepted per materialize()'s contract). The corpus gram
@@ -1986,6 +1860,14 @@ def multi_benchmark_leak_report(
     totals = bench_g.groupBy("__bid").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_distinct_grams")
     )
+    # fill-in joins over ALL benchmark items, including sub-k ones; the
+    # per-item aggregates are eval-set-bounded, so when the size check
+    # licensed broadcasting the digests it licenses these hints too —
+    # but when it DECLINED (oversized or swapped benchmark argument),
+    # forcing them would re-introduce the OOM the auto check exists to
+    # prevent (one row per benchmark item), so the hints are gated on
+    # the same resolved decision and AQE plans the oversized case
+    # (ADVICE r13)
     hint = F.broadcast if broadcast else (lambda d: d)
     all_items = benchmarks.select(
         F.col(id_col).alias("__bid"), F.col(set_col).alias("__set")

@@ -18,7 +18,7 @@ Spark-first equivalents:
 
 from __future__ import annotations
 
-from collections.abc import Sequence
+from collections.abc import Callable, Sequence
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -522,6 +522,54 @@ def streaming_upsert_foreachbatch(
     return state["df"]
 
 
+def _replay_id_ordered(
+    spark: SparkSession,
+    docs: DataFrame,
+    id_col: str,
+    text_col: str,
+    n_batches: int,
+    query_name: str,
+    stage_dir: str | None,
+    apply_batch: Callable[[DataFrame, int], None],
+) -> None:
+    """The batch-ARRIVAL SIMULATOR of the document-stream operators
+    below, not part of any operator's dataflow: stage ``docs`` as
+    (__did, __text) into ``n_batches`` id-ordered ntile range files
+    with ascending mtimes, then run ``apply_batch`` over a file stream
+    that reads one file per trigger — in mtime order, i.e. id order —
+    until every batch is processed."""
+    import os
+    import tempfile
+
+    stage_dir = stage_dir or tempfile.mkdtemp(prefix=f"gks_{query_name}_")
+    docs = normalize_ntz(docs).select(
+        F.col(id_col).alias("__did"), F.col(text_col).alias("__text")
+    )
+    w = Window.partitionBy(F.lit(1)).orderBy(F.col("__did").asc())
+    staged = docs.withColumn("__bk", F.ntile(n_batches).over(w))
+    for b in range(1, n_batches + 1):
+        part_dir = os.path.join(stage_dir, f"b{b:04d}")
+        staged.filter(F.col("__bk") == b).drop("__bk").coalesce(1).write.mode(
+            "overwrite"
+        ).parquet(part_dir)
+    for b in range(1, n_batches + 1):
+        d = os.path.join(stage_dir, f"b{b:04d}")
+        fs = [f for f in os.listdir(d) if f.endswith(".parquet")]
+        src = os.path.join(d, fs[0])
+        dst = os.path.join(stage_dir, f"batch-{b:04d}.parquet")
+        os.replace(src, dst)
+        os.utime(dst, (1_000_000 + b, 1_000_000 + b))
+    schema = spark.read.parquet(os.path.join(stage_dir, "batch-0001.parquet")).schema
+    stream = (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(os.path.join(stage_dir, "batch-*.parquet"))
+    )
+    q = stream.writeStream.foreachBatch(apply_batch).queryName(query_name).start()
+    q.processAllAvailable()
+    q.stop()
+
+
 def streaming_minhash_dedup(
     spark: SparkSession,
     docs: DataFrame,
@@ -554,42 +602,10 @@ def streaming_minhash_dedup(
     staging table, here materialize()); shingle arrays never ride the
     band exchange (the ``_minhash_state`` contract); state grows
     linearly with corpus (bands + hashed shingle sets — the same
-    footprint the batch join materializes). The ntile staging below is
-    the batch-ARRIVAL SIMULATOR for a file stream, not part of the
+    footprint the batch join materializes). ``_replay_id_ordered`` is
+    the batch-arrival simulator for a file stream, not part of the
     operator's dataflow."""
-    import os
-    import tempfile
-
     from graphkb_spark.operators.dedup import _minhash_state
-
-    stage_dir = stage_dir or tempfile.mkdtemp(prefix=f"gks_{query_name}_")
-    docs = normalize_ntz(docs).select(
-        F.col(id_col).alias("__did"), F.col(text_col).alias("__text")
-    )
-    # ---- arrival simulator: id-ordered range files, ascending mtimes
-    w = Window.partitionBy(F.lit(1)).orderBy(F.col("__did").asc())
-    staged = docs.withColumn("__bk", F.ntile(n_batches).over(w))
-    for k in range(1, n_batches + 1):
-        part_dir = os.path.join(stage_dir, f"b{k:04d}")
-        staged.filter(F.col("__bk") == k).drop("__bk").coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(part_dir)
-    # one file per trigger, in mtime order = id order
-    files = []
-    for k in range(1, n_batches + 1):
-        d = os.path.join(stage_dir, f"b{k:04d}")
-        fs = [f for f in os.listdir(d) if f.endswith(".parquet")]
-        src = os.path.join(d, fs[0])
-        dst = os.path.join(stage_dir, f"batch-{k:04d}.parquet")
-        os.replace(src, dst)
-        os.utime(dst, (1_000_000 + k, 1_000_000 + k))
-        files.append(dst)
-    schema = spark.read.parquet(files[0]).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(os.path.join(stage_dir, "batch-*.parquet"))
-    )
 
     state: dict[str, DataFrame | None] = {"bands": None, "sh": None, "out": None}
 
@@ -628,22 +644,18 @@ def streaming_minhash_dedup(
                 )
             )
         pairs = cand.dropDuplicates(["id_a", "id_b"])
+        # arithmetic union on the distinct hashed sets — identical
+        # Jaccard for one set-op per pair instead of two (opt r18, see
+        # minhash_lsh_pairs)
+        inter = F.size(F.array_intersect("sh_a", "sh_b"))
         verified = (
             pairs.join(sh_a, "id_a")
             .join(
                 sh.select(F.col("__id").alias("id_b"), F.col("__sh").alias("sh_b")),
                 "id_b",
             )
-            # arithmetic union on the distinct hashed sets — identical
-            # Jaccard for one set-op per pair instead of two (opt r18,
-            # see minhash_lsh_pairs)
             .filter(
-                F.size(F.array_intersect("sh_a", "sh_b"))
-                / (
-                    F.size("sh_a")
-                    + F.size("sh_b")
-                    - F.size(F.array_intersect("sh_a", "sh_b"))
-                )
+                inter / (F.size("sh_a") + F.size("sh_b") - inter)
                 >= jaccard_threshold
             )
             .select("id_b")
@@ -669,13 +681,10 @@ def streaming_minhash_dedup(
             out if state["out"] is None else state["out"].unionByName(out)
         ).transform(materialize)
 
-    q = (
-        stream.writeStream.foreachBatch(apply_batch)
-        .queryName(query_name)
-        .start()
+    _replay_id_ordered(
+        spark, docs, id_col, text_col, n_batches, query_name, stage_dir,
+        apply_batch,
     )
-    q.processAllAvailable()
-    q.stop()
     return state["out"]
 
 
@@ -698,83 +707,16 @@ def streaming_decontaminate(
     probed against the STATIC evaluation-set digest table before
     anything lands in the lake. Returns one row per document:
     (id, n_grams, k_gram_hits, contaminated) — byte-identical to the
-    batch ``exact_substring_contamination`` over the same corpus,
-    because the flag is a per-document property (each doc arrives
-    whole in one micro-batch) and the operator keeps NO cross-batch
-    state: the state store is never touched, so the stream is
-    trivially exactly-once per document and restarts are free.
+    batch ``exact_substring_contamination`` over the same corpus.
 
-    Scale shape: the benchmark digest set is built, size-checked
-    (the ``exact_substring_contamination`` auto-broadcast contract),
-    and materialized ONCE before the stream starts — per batch the
-    corpus gram stream probes that staged table (broadcast under
-    ``broadcast_max_digests``, AQE-planned above) and never shuffles;
-    the only per-batch exchanges are the doc-keyed hit aggregation
-    and fill-in join. The ntile staging below is the batch-ARRIVAL
-    SIMULATOR for a file stream, not part of the operator's
-    dataflow."""
-    import os
-    import tempfile
+    N=1 call of ``streaming_multi_decontaminate`` (scale shape and the
+    no-cross-batch-state argument are documented there)."""
+    from graphkb_spark.operators.dedup import _ONE_SET, _one_set
 
-    from graphkb_spark.operators.dedup import (
-        _contamination_probe,
-        _gram_digests,
-        _resolve_broadcast,
-    )
-
-    stage_dir = stage_dir or tempfile.mkdtemp(prefix=f"gks_{query_name}_")
-    docs = normalize_ntz(docs).select(
-        F.col(id_col).alias("__did"), F.col(text_col).alias("__text")
-    )
-    # digest side prepared once, outside the stream: counted for the
-    # broadcast decision and checkpointed so micro-batches share the
-    # computed digest table instead of re-tokenizing the benchmark
-    # per trigger
-    bench_d, broadcast = _resolve_broadcast(
-        _gram_digests(benchmark, text_col, k), "auto", broadcast_max_digests
-    )
-    # ---- arrival simulator: id-ordered range files, ascending mtimes
-    w = Window.partitionBy(F.lit(1)).orderBy(F.col("__did").asc())
-    staged = docs.withColumn("__bk", F.ntile(n_batches).over(w))
-    for b in range(1, n_batches + 1):
-        part_dir = os.path.join(stage_dir, f"b{b:04d}")
-        staged.filter(F.col("__bk") == b).drop("__bk").coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(part_dir)
-    for b in range(1, n_batches + 1):
-        d = os.path.join(stage_dir, f"b{b:04d}")
-        fs = [f for f in os.listdir(d) if f.endswith(".parquet")]
-        src = os.path.join(d, fs[0])
-        dst = os.path.join(stage_dir, f"batch-{b:04d}.parquet")
-        os.replace(src, dst)
-        os.utime(dst, (1_000_000 + b, 1_000_000 + b))
-    schema = spark.read.parquet(os.path.join(stage_dir, "batch-0001.parquet")).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(os.path.join(stage_dir, "batch-*.parquet"))
-    )
-
-    state: dict[str, DataFrame | None] = {"out": None}
-
-    def apply_batch(batch: DataFrame, batch_id: int) -> None:
-        flags = _contamination_probe(
-            batch, bench_d, "__text", "__did", k, min_hits, broadcast
-        ).withColumnRenamed("__did", id_col)
-        state["out"] = (
-            flags
-            if state["out"] is None
-            else state["out"].unionByName(flags)
-        ).transform(materialize)
-
-    q = (
-        stream.writeStream.foreachBatch(apply_batch)
-        .queryName(query_name)
-        .start()
-    )
-    q.processAllAvailable()
-    q.stop()
-    return state["out"]
+    return streaming_multi_decontaminate(
+        spark, docs, _one_set(benchmark), _ONE_SET, id_col, text_col, k,
+        min_hits, n_batches, broadcast_max_digests, query_name, stage_dir,
+    ).select(id_col, "n_grams", "k_gram_hits", "contaminated")
 
 
 def streaming_multi_decontaminate(
@@ -807,52 +749,26 @@ def streaming_multi_decontaminate(
 
     Scale shape: the (set, digest) table is built, size-checked (the
     family's auto-broadcast contract) and materialized ONCE before
-    the stream starts; per batch the gram stream probes that staged
-    table and never shuffles, and the flag + attribution come out of
-    the shared single-aggregation probe
+    the stream starts, so micro-batches share the computed digest
+    table instead of re-tokenizing the benchmarks per trigger; per
+    batch the gram stream probes that staged table (broadcast under
+    ``broadcast_max_digests``, AQE-planned above) and never shuffles,
+    and the flag + attribution come out of the shared probe
     (``dedup._multi_contamination_probe`` — zero joins after the
-    probe). The ntile staging below is the batch-arrival SIMULATOR
-    for a file stream, not part of the operator's dataflow."""
-    import os
-    import tempfile
-
+    probe). ``_replay_id_ordered`` is the batch-arrival simulator for
+    a file stream, not part of the operator's dataflow."""
     from graphkb_spark.operators.dedup import (
         _gram_digests,
         _multi_contamination_probe,
         _resolve_broadcast,
     )
 
-    stage_dir = stage_dir or tempfile.mkdtemp(prefix=f"gks_{query_name}_")
-    docs = normalize_ntz(docs).select(
-        F.col(id_col).alias("__did"), F.col(text_col).alias("__text")
-    )
     bench_g, broadcast = _resolve_broadcast(
         _gram_digests(
             benchmarks, text_col, k, F.col(set_col).cast("string").alias("__s")
         ),
         "auto",
         broadcast_max_digests,
-    )
-    # ---- arrival simulator: id-ordered range files, ascending mtimes
-    w = Window.partitionBy(F.lit(1)).orderBy(F.col("__did").asc())
-    staged = docs.withColumn("__bk", F.ntile(n_batches).over(w))
-    for b in range(1, n_batches + 1):
-        part_dir = os.path.join(stage_dir, f"b{b:04d}")
-        staged.filter(F.col("__bk") == b).drop("__bk").coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(part_dir)
-    for b in range(1, n_batches + 1):
-        d = os.path.join(stage_dir, f"b{b:04d}")
-        fs = [f for f in os.listdir(d) if f.endswith(".parquet")]
-        src = os.path.join(d, fs[0])
-        dst = os.path.join(stage_dir, f"batch-{b:04d}.parquet")
-        os.replace(src, dst)
-        os.utime(dst, (1_000_000 + b, 1_000_000 + b))
-    schema = spark.read.parquet(os.path.join(stage_dir, "batch-0001.parquet")).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(os.path.join(stage_dir, "batch-*.parquet"))
     )
 
     state: dict[str, DataFrame | None] = {"out": None}
@@ -867,11 +783,8 @@ def streaming_multi_decontaminate(
             else state["out"].unionByName(flags)
         ).transform(materialize)
 
-    q = (
-        stream.writeStream.foreachBatch(apply_batch)
-        .queryName(query_name)
-        .start()
+    _replay_id_ordered(
+        spark, docs, id_col, text_col, n_batches, query_name, stage_dir,
+        apply_batch,
     )
-    q.processAllAvailable()
-    q.stop()
     return state["out"]

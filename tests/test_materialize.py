@@ -229,3 +229,82 @@ def test_stream_minhash_dedup_identical_under_reliable_mode(spark, reliable):
     assert got == local
     keep = dict(got)
     assert keep[0] is True and keep[3] is False   # exact dup suppressed
+
+
+def _decon_frames(spark):
+    corpus = spark.createDataFrame(
+        [
+            (1, "prefix words the secret eval passage appears here verbatim ok"),
+            (2, "the quick brown fox jumps over the lazy dog this morning"),
+            (3, "completely different text about catalyst and tungsten"),
+            (4, "short doc"),  # sub-k: no grams, never flagged
+            (5, "the secret eval passage appears then the quick brown fox jumps over"),
+        ],
+        ["doc_id", "text"],
+    )
+    bench = spark.createDataFrame(
+        [
+            (100, "the secret eval passage appears here verbatim and more", "a"),
+            (101, "the quick brown fox jumps over the lazy dog at noon", "b"),
+            (102, "tiny item", "b"),  # sub-k eval item: 0 grams
+        ],
+        ["doc_id", "text", "suite"],
+    )
+    return corpus, bench
+
+
+@pytest.mark.parametrize("mode", ["reliable", "parquet"])
+def test_decontamination_family_identical_under_reliable_modes(
+    spark, reliable, mode
+):
+    """Every single-set decontamination function (an N=1 call of its
+    multi-set twin, or the cut with its own plan) and every twin must
+    return the local-mode rows when its staging tables are reliable
+    checkpoints or eager parquet writes."""
+    from graphkb_spark.operators import dedup
+    from graphkb_spark.streaming.incremental import (
+        streaming_decontaminate,
+        streaming_multi_decontaminate,
+    )
+
+    corpus, bench = _decon_frames(spark)
+    single = bench.drop("suite")
+    k = 5
+    batch = {
+        "flag": lambda: dedup.exact_substring_contamination(
+            corpus, single, "text", "doc_id", k=k),
+        "report": lambda: dedup.benchmark_leak_report(
+            corpus, single, "text", "doc_id", k=k),
+        "spans": lambda: dedup.benchmark_leak_spans(
+            corpus, single, "text", "doc_id", k=k),
+        "cut": lambda: dedup.cut_contaminated_spans(
+            corpus, single, "text", "doc_id", k=k),
+        "multi_flag": lambda: dedup.multi_benchmark_contamination(
+            corpus, bench, "text", "doc_id", "suite", k=k),
+        "multi_report": lambda: dedup.multi_benchmark_leak_report(
+            corpus, bench, "text", "doc_id", "suite", k=k),
+        "multi_spans": lambda: dedup.multi_benchmark_leak_spans(
+            corpus, bench, "text", "doc_id", "suite", k=k),
+        "multi_cut": lambda: dedup.cut_multi_benchmark_spans(
+            corpus, bench, "text", "doc_id", "suite", k=k),
+    }
+
+    def run_all(tag):
+        out = {name: _rows(fn()) for name, fn in batch.items()}
+        out["stream"] = _rows(streaming_decontaminate(
+            spark, corpus, single, k=k, n_batches=2,
+            query_name=f"rt_decon_{tag}"))
+        out["multi_stream"] = _rows(streaming_multi_decontaminate(
+            spark, corpus, bench, "suite", k=k, n_batches=2,
+            query_name=f"rt_mdecon_{tag}"))
+        return out
+
+    local = run_all("local")
+    reliable(mode)
+    assert run_all(mode) == local
+    # the corpus exercises leaks, clean docs and the sub-k doc
+    flags = {r[0]: r[1:] for r in local["flag"]}
+    assert flags[1][2] and flags[2][2] and not flags[3][2]
+    assert flags[4] == (0, 0, False)
+    assert any(r[0] == 102 and r[1] == 0 for r in local["report"])
+    assert local["spans"] and local["multi_spans"]
