@@ -12,7 +12,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from graphkb_spark.core.materialize import materialize
-from graphkb_spark.operators.skew import ensure_scan_parallelism
+from graphkb_spark.operators.skew import ensure_scan_parallelism, exchange_width
 
 
 def recurrence_threshold(
@@ -467,14 +467,13 @@ def grouped_outliers(
     group_cols: Sequence[str],
     value_col: str,
     z: float = 3.0,
-    broadcast: bool | None = None,
 ) -> DataFrame:
     """Per-group z-score outlier detection: rows whose value deviates
     from the group mean by more than ``z`` population standard
     deviations, annotated with the rounded z-score. One
-    partial-aggregating shuffle for the group moments, a broadcast-able
-    join back, and a scan-speed filter — the screening pass that runs
-    before trusting per-group aggregates at corpus scale. Zero-variance
+    partial-aggregating shuffle for the group moments, a join back,
+    and a scan-speed filter — the screening pass that runs before
+    trusting per-group aggregates at corpus scale. Zero-variance
     groups produce no outliers (try_divide yields NULL, which fails
     the > z filter).
 
@@ -487,12 +486,10 @@ def grouped_outliers(
     that exactness — fine while |mu|/sigma is within a few orders of
     magnitude, the regime of every quality-score/price-like column.
 
-    ``broadcast``: True forces a broadcast hint on the stats table,
-    False forbids it, None (default) leaves the choice to Catalyst/AQE.
-    Stats is one row per group — an unbounded-cardinality group column
-    (per-user, per-URL) can exceed the broadcast limit, where a forced
-    hint fails the job instead of degrading to a shuffle join, so the
-    hint is opt-in (same contract as ``hierarchy_rollup``)."""
+    The stats join carries no broadcast hint: stats is one row per
+    group, and an unbounded-cardinality group column (per-user,
+    per-URL) can exceed the broadcast limit, where a forced hint fails
+    the job instead of degrading to a shuffle join."""
     v = F.col(value_col)
     n = F.count(F.lit(1)).cast("double")
     stats = df.groupBy(*group_cols).agg(
@@ -501,8 +498,6 @@ def grouped_outliers(
     ).withColumn(
         "__sigma", F.sqrt(F.col("__ex2") - F.col("__mu") * F.col("__mu"))
     ).drop("__ex2")
-    if broadcast:
-        stats = F.broadcast(stats)
     score = F.try_divide(v - F.col("__mu"), F.col("__sigma"))
     return (
         df.join(stats, list(group_cols))
@@ -658,7 +653,6 @@ def winsorize_per_group(
     value_col: str,
     lower: float = 0.05,
     upper: float = 0.95,
-    broadcast: bool | None = None,
 ) -> DataFrame:
     """Per-group winsorization: clip ``value_col`` to the group's
     [``lower``, ``upper``] linearly-interpolated percentiles — the
@@ -669,16 +663,13 @@ def winsorize_per_group(
     One partial-aggregating shuffle for the two percentiles per group
     (exact percentiles sort within groups — dimension-bounded groups;
     Spark ``percentile`` == DuckDB ``quantile_cont``, the parity
-    ``grouped_percentiles`` already pins), a join back (``broadcast``:
-    True forces the hint, None leaves it to Catalyst/AQE — same
-    contract as ``grouped_outliers``), and a scan-speed clip."""
+    ``grouped_percentiles`` already pins), an unhinted join back (the
+    ``grouped_outliers`` rationale), and a scan-speed clip."""
     v = F.col(value_col)
     stats = df.groupBy(*group_cols).agg(
         F.percentile(v, F.lit(lower)).alias("__lo"),
         F.percentile(v, F.lit(upper)).alias("__hi"),
     )
-    if broadcast:
-        stats = F.broadcast(stats)
     clipped = F.least(F.greatest(v, F.col("__lo")), F.col("__hi"))
     return (
         df.join(stats, list(group_cols))
@@ -975,7 +966,7 @@ def pareto_frontier_2d(
     per-bucket min table (one row per bucket). Boundaries shape only
     the plan — the frontier is identical whatever the sampler picked.
     The frontier test is then a narrow filter."""
-    n_buckets = n_buckets or df.sparkSession.sparkContext.defaultParallelism
+    n_buckets = n_buckets or exchange_width(df)
     x, y = F.col(x_col).cast("double"), F.col(y_col).cast("double")
     # order-aligned range buckets via sampled boundaries (the
     # sorted-neighborhood fix): equal-width binning degenerates when x

@@ -36,6 +36,7 @@ from pyspark.sql import functions as F
 from graphkb_spark.core.materialize import materialize
 
 from graphkb_spark.operators.dedup import word_shingles
+from graphkb_spark.operators.skew import exchange_width
 from graphkb_spark.operators.text import TOKEN_REGEX
 
 
@@ -441,7 +442,6 @@ def bpe_train_sampled(
     text_col: str,
     n_merges: int = 8,
     sample_docs: int = 100_000,
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """Sample-based BPE training — the 100-TB story for ``bpe_train``
     (VERDICT r11 #6). Full training costs V merges x a full-corpus
@@ -470,12 +470,11 @@ def bpe_train_sampled(
 
     This is how sampling composes with the engine: the top-n draw is a
     distributed TakeOrdered (partial top-n per partition, no full
-    sort), the sample is respread over ``num_partitions`` before the
-    explode, and training proceeds on the bounded subcorpus — driver
-    traffic stays the per-merge 1-row argmax."""
+    sort), the sample is respread over ``exchange_width`` partitions
+    before the explode, and training proceeds on the bounded
+    subcorpus — driver traffic stays the per-merge 1-row argmax."""
     if sample_docs < 1:
         raise ValueError("sample_docs must be >= 1")
-    n_part = num_partitions or df.sparkSession.sparkContext.defaultParallelism
     rank = F.conv(F.substring(F.md5(F.col("__t")), 1, 15), 16, 10).cast(
         "bigint"
     )
@@ -484,7 +483,7 @@ def bpe_train_sampled(
         .withColumn("__h", rank)
         .orderBy(F.col("__h").asc(), F.col("__t").asc())
         .limit(sample_docs)
-        .repartition(n_part)
+        .repartition(exchange_width(df))
         .select(F.col("__t").alias(text_col))
     )
     return bpe_train(sample, text_col, n_merges)
@@ -841,9 +840,8 @@ def heaps_fit(
     docs = toks.select("__id", F.size("__t").alias("__n")).filter(
         F.col("__n") > 0
     )
-    nb = df.sparkSession.sparkContext.defaultParallelism
     base = (
-        docs.repartitionByRange(nb, F.col("__id").asc())
+        docs.repartitionByRange(exchange_width(df), F.col("__id").asc())
         .withColumn("__b", F.spark_partition_id())
         .transform(materialize, eager=False)
     )

@@ -69,9 +69,7 @@ def with_words(df: DataFrame, text_col: str, out: str = "__w") -> DataFrame:
     return df.withColumn(out, words(text_col))
 
 
-def _doc_tokens(
-    df: DataFrame, text_col: str, id_col: str, key: str, num_partitions: int | None
-) -> DataFrame:
+def _doc_tokens(df: DataFrame, text_col: str, id_col: str, key: str) -> DataFrame:
     """(key, __w): one row per document with its normalized word array,
     tokenized AFTER the doc-keyed exchange (opt r17, guide §2.5):
     words() on the scan side serializes the regex tokenization onto the
@@ -80,16 +78,12 @@ def _doc_tokens(
     tokenize+shingle+digest chain runs at the operator's parallelism.
     The select stays un-collapsed downstream (words() is multiply
     referenced inside the shingle HOF, so CollapseProject keeps it an
-    attribute — verified against the optimized plan).
-
-    ``num_partitions=0`` skips the exchange — the cluster-scale setting
-    for operators whose downstream keys are not the doc id: scan splits
-    already parallelize, so the corpus text never crosses the wire.
-    ``None`` sizes it by ``exchange_width``."""
-    out = df.select(F.col(id_col).alias(key), F.col(text_col).alias("__t"))
-    if num_partitions != 0:
-        out = out.repartition(num_partitions or exchange_width(df), key)
-    return out.select(key, words("__t").alias("__w"))
+    attribute — verified against the optimized plan)."""
+    return (
+        df.select(F.col(id_col).alias(key), F.col(text_col).alias("__t"))
+        .repartition(exchange_width(df), key)
+        .select(key, words("__t").alias("__w"))
+    )
 
 
 def exact_dedup(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
@@ -313,7 +307,6 @@ def _minhash_state(
     bands: int,
     shingle_n: int,
     hasher: str,
-    num_partitions: int | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """The shared MinHash-LSH state tables: ``base`` = one row per doc
     (__id, __sh hashed shingle set, __sig signature), materialized
@@ -323,7 +316,6 @@ def _minhash_state(
     (``minhash_lsh_pairs``) and the streaming suppressor
     (``streaming/incremental.py:streaming_minhash_dedup``)."""
     rows_per_band = num_hashes // bands
-    n_part = num_partitions or exchange_width(df)
     if hasher == "md5":
         # one md5 digest per shingle; the affine family minima are the
         # same integers whether computed by the numpy UDF (used here)
@@ -338,7 +330,7 @@ def _minhash_state(
     else:
         digest = lambda s: F.pmod(F.xxhash64(s), F.lit(_MH_PRIME))  # noqa: E731
         band_hash = lambda band_slice: F.xxhash64(F.concat_ws(",", band_slice))  # noqa: E731
-    shingled = _doc_tokens(df, text_col, id_col, "__id", n_part).select(
+    shingled = _doc_tokens(df, text_col, id_col, "__id").select(
         "__id",
         F.array_distinct(
             F.transform(word_shingles("__w", shingle_n), digest)
@@ -386,7 +378,6 @@ def minhash_lsh_pairs(
     shingle_n: int = 3,
     jaccard_threshold: float = 0.8,
     hasher: str = "xxhash64",
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """Near-duplicate pairs via MinHash + LSH banding, verified with
     exact Jaccard over the HASHED shingle sets. Returns
@@ -417,15 +408,9 @@ def minhash_lsh_pairs(
     slower end-to-end at sf0.1 (one extra job + re-shuffle, since a
     localCheckpoint boundary drops the partitioning info the agg could
     have reused).
-    ``num_partitions``: pre-join spread of the signature computation;
-    defaults to ``max(defaultParallelism, shuffle.partitions)``
-    (``skew.exchange_width`` — data-sized on a cluster that raises
-    shuffle.partitions, core-sized locally where the session pins the
-    two equal).
     """
     base, banded = _minhash_state(
-        df, text_col, id_col, num_hashes, bands, shingle_n, hasher,
-        num_partitions,
+        df, text_col, id_col, num_hashes, bands, shingle_n, hasher
     )
 
     a = banded.select("band", "bhash", F.col("__id").alias("id_a"))
@@ -455,7 +440,7 @@ def minhash_lsh_pairs(
 
 
 def _shingle_base(
-    df: DataFrame, text_col: str, id_col: str, shingle_n: int, n_part: int
+    df: DataFrame, text_col: str, id_col: str, shingle_n: int
 ) -> DataFrame:
     """PPJoin stage 1, the materialized shingle base: one row per doc,
     (__id, __sh distinct shingle strings, __shh, __nh).
@@ -471,7 +456,7 @@ def _shingle_base(
     localCheckpoint over persist so blocks free on GC (no cache
     accumulation across calls in a long-lived session)."""
     return (
-        _doc_tokens(df, text_col, id_col, "__id", n_part)
+        _doc_tokens(df, text_col, id_col, "__id")
         .select("__id", F.array_distinct(word_shingles("__w", shingle_n)).alias("__sh"))
         .select(
             "__id",
@@ -497,7 +482,7 @@ def _prefix_len(frac: float, n: str) -> Column:
 
 
 def _prefix_postings(
-    base: DataFrame, threshold: float, n_part: int, *cols: str
+    base: DataFrame, threshold: float, *cols: str
 ) -> tuple[DataFrame, DataFrame]:
     """PPJoin stage 2: the digest posting list (__id, __n, shingle) and
     its prefix rows — each doc's |x| - ceil(t*|x|) + 1 globally rarest
@@ -535,7 +520,7 @@ def _prefix_postings(
     )
     freq = posting.groupBy("shingle").agg(F.count(F.lit(1)).alias("df_"))
     ranked = posting.join(freq, "shingle").repartition(
-        n_part, "__id"
+        exchange_width(base), "__id"
     ).withColumn(
         "__rk",
         F.row_number().over(
@@ -607,7 +592,6 @@ def _budget_route(
 def _verify_pairs(
     cand: DataFrame,
     base: DataFrame,
-    n_part: int,
     digest_bound: Column,
     name: str,
     value: Column,
@@ -654,7 +638,7 @@ def _verify_pairs(
     ``value``: sh_*/shh_* (string/digest sets), n_*/nh_* (their
     sizes), for sides a and b."""
     cand = cand.dropDuplicates(["id_a", "id_b"]).repartition(
-        n_part, F.xxhash64(F.col("id_a"), F.col("id_b"))
+        exchange_width(base), F.xxhash64(F.col("id_a"), F.col("id_b"))
     )
     sh = base.select(
         "__id", "__sh", "__shh", "__nh", F.size("__sh").alias("__n")
@@ -676,7 +660,6 @@ def ngram_jaccard_pairs(
     id_col: str,
     shingle_n: int = 3,
     threshold: float = 0.5,
-    num_partitions: int | None = None,
     candidate_budget: int | None = None,
     budget_action: str = "warn",
     stats: dict | None = None,
@@ -759,11 +742,8 @@ def ngram_jaccard_pairs(
     ANSI-SQL oracle (the ``ngram_jaccard_routed`` registry query
     checks the escape hatch end-to-end that way)."""
     _check_budget_action(budget_action)
-    n_part = num_partitions or exchange_width(df)
-    base = _shingle_base(df, text_col, id_col, shingle_n, n_part)
-    _, prefix = _prefix_postings(
-        base, threshold, n_part, "__id", "__n", "__rk", "shingle"
-    )
+    base = _shingle_base(df, text_col, id_col, shingle_n)
+    _, prefix = _prefix_postings(base, threshold, "__id", "__n", "__rk", "shingle")
     prefix, routed = _budget_route(
         prefix, candidate_budget, budget_action, stats,
         "ngram_jaccard_pairs",
@@ -781,7 +761,6 @@ def ngram_jaccard_pairs(
             id_col,
             shingle_n=shingle_n,
             jaccard_threshold=threshold,
-            num_partitions=num_partitions,
             **(route_kwargs or {}),
         ),
     )
@@ -848,7 +827,6 @@ def ngram_jaccard_pairs(
     return _verify_pairs(
         cand,
         base,
-        n_part,
         inter_h / (F.col("nh_a") + F.col("nh_b") - inter_h)
         >= F.lit(threshold) - F.lit(1e-9),
         "jaccard",
@@ -944,7 +922,6 @@ def _probe_rows(
     text_col: str,
     id_col: str,
     k: int,
-    num_partitions: int | None,
 ) -> DataFrame:
     """(__id, __n, __d): the corpus gram stream of the whole-doc
     probes, on which every doc rides exactly once — sub-k docs
@@ -952,7 +929,7 @@ def _probe_rows(
     never matches the probe), and the doc's gram count ``__n`` travels
     arithmetically beside its grams, so one doc-keyed aggregation
     yields hits AND fill-in zeros with no join back to the doc list."""
-    tokens = _doc_tokens(corpus, text_col, id_col, "__id", num_partitions)
+    tokens = _doc_tokens(corpus, text_col, id_col, "__id")
     return tokens.select(
         "__id",
         F.greatest(F.size("__w") - F.lit(k - 1), F.lit(0))
@@ -980,7 +957,6 @@ def repeated_spans(
     id_col: str,
     k: int = 50,
     min_count: int = 2,
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """Exact-substring repeated-passage detection (Lee et al. 2022,
     "Deduplicating Training Data Makes Language Models Better",
@@ -1009,8 +985,7 @@ def repeated_spans(
     no spans (whole-document duplicates are ``exact_dedup``'s job)."""
     if k < 1 or min_count < 2:
         raise ValueError("k must be >= 1 and min_count >= 2")
-    n_part = num_partitions or exchange_width(df)
-    base = _doc_tokens(df, text_col, id_col, "__id", n_part)
+    base = _doc_tokens(df, text_col, id_col, "__id")
     return _repeated_spans_from_tokens(base, id_col, k, min_count)
 
 
@@ -1097,7 +1072,6 @@ def cut_repeated_spans(
     id_col: str,
     k: int = 50,
     min_count: int = 2,
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """The cleaning half of ExactSubstr (companion to
     ``repeated_spans``): remove every repeated-passage span from each
@@ -1119,9 +1093,8 @@ def cut_repeated_spans(
     (ADVICE r11)."""
     if k < 1 or min_count < 2:
         raise ValueError("k must be >= 1 and min_count >= 2")
-    n_part = num_partitions or exchange_width(df)
     # the checkpoint stores tokens, not raw text
-    base = _doc_tokens(df, text_col, id_col, "__id", n_part).transform(materialize)
+    base = _doc_tokens(df, text_col, id_col, "__id").transform(materialize)
     spans = _repeated_spans_from_tokens(base, id_col, k, min_count)
     return _cut_spans(base, spans, id_col)
 
@@ -1132,7 +1105,6 @@ def _cut_probe(
     text_col: str,
     id_col: str,
     k: int,
-    num_partitions: int | None,
     broadcast: bool | str,
     broadcast_max_digests: int,
     *key_cols: Column,
@@ -1147,16 +1119,13 @@ def _cut_probe(
     the single cutter's probe broadcast inside the checkpoint)."""
     if k < 1:
         raise ValueError("k must be >= 1")
-    n_part = num_partitions or exchange_width(corpus)
     bench_d, broadcast = _resolve_broadcast(
         _gram_digests(benchmarks, text_col, k, *key_cols),
         broadcast,
         broadcast_max_digests,
     )
     # the checkpoint stores tokens, not raw text
-    base = _doc_tokens(corpus, text_col, id_col, "__id", n_part).transform(
-        materialize
-    )
+    base = _doc_tokens(corpus, text_col, id_col, "__id").transform(materialize)
     grams = _gram_stream(base, k, "__id", positions=True)
     return base, grams.join(F.broadcast(bench_d) if broadcast else bench_d, "__d")
 
@@ -1167,7 +1136,6 @@ def cut_contaminated_spans(
     text_col: str,
     id_col: str,
     k: int = 13,
-    num_partitions: int | None = None,
     broadcast: bool | str = "auto",
     broadcast_max_digests: int = 4_000_000,
 ) -> DataFrame:
@@ -1192,8 +1160,7 @@ def cut_contaminated_spans(
     span join-back, both on the already-co-partitioned doc id. Docs
     shorter than k tokens emit no grams and pass through uncut."""
     base, matched = _cut_probe(
-        corpus, benchmark, text_col, id_col, k, num_partitions, broadcast,
-        broadcast_max_digests,
+        corpus, benchmark, text_col, id_col, k, broadcast, broadcast_max_digests
     )
     spans = _positions_to_spans(matched.select("__id", "__p"), id_col, k)
     return _cut_spans(base, spans, id_col)
@@ -1206,7 +1173,6 @@ def cut_multi_benchmark_spans(
     id_col: str,
     set_col: str,
     k: int = 13,
-    num_partitions: int | None = None,
     broadcast: bool | str = "auto",
     broadcast_max_digests: int = 4_000_000,
 ) -> DataFrame:
@@ -1257,7 +1223,7 @@ def cut_multi_benchmark_spans(
     # one data consumer: attribution reads the probe's OUTPUT, not the
     # digest table again
     base, matched = _cut_probe(
-        corpus, benchmarks, text_col, id_col, k, num_partitions, broadcast,
+        corpus, benchmarks, text_col, id_col, k, broadcast,
         broadcast_max_digests, F.col(set_col).cast("string").alias("__s"),
     )
     # staged: TWO consumers (island window + attribution) read the
@@ -1313,7 +1279,6 @@ def benchmark_leak_report(
     text_col: str,
     id_col: str,
     k: int = 13,
-    num_partitions: int | None = None,
     broadcast: bool | str = "auto",
     broadcast_max_digests: int = 4_000_000,
 ) -> DataFrame:
@@ -1336,7 +1301,7 @@ def benchmark_leak_report(
     that unique-key fill-in join."""
     return multi_benchmark_leak_report(
         corpus, _one_set(benchmark), text_col, id_col, _ONE_SET, k,
-        num_partitions, broadcast, broadcast_max_digests,
+        broadcast, broadcast_max_digests,
     ).select(
         id_col,
         "n_distinct_grams",
@@ -1353,7 +1318,6 @@ def benchmark_leak_spans(
     text_col: str,
     id_col: str,
     k: int = 13,
-    num_partitions: int | None = None,
     broadcast: bool | str = "auto",
     broadcast_max_digests: int = 4_000_000,
 ) -> DataFrame:
@@ -1374,7 +1338,7 @@ def benchmark_leak_spans(
     N=1 call of ``multi_benchmark_leak_spans`` (scale shape there)."""
     return multi_benchmark_leak_spans(
         corpus, _one_set(benchmark), text_col, id_col, _ONE_SET, k,
-        num_partitions, broadcast, broadcast_max_digests,
+        broadcast, broadcast_max_digests,
     ).select("bench_id", id_col, "span_start", "span_end", "span_tokens")
 
 
@@ -1385,7 +1349,6 @@ def multi_benchmark_leak_spans(
     id_col: str,
     set_col: str,
     k: int = 13,
-    num_partitions: int | None = None,
     broadcast: bool | str = "auto",
     broadcast_max_digests: int = 4_000_000,
 ) -> DataFrame:
@@ -1408,14 +1371,14 @@ def multi_benchmark_leak_spans(
     Scale shape: the suite (item, set, digest — distinct) table
     follows the size-checked ``broadcast="auto"`` contract and is
     staged before the auto count (staged-once, VERDICT r13 #3); the
-    corpus positional gram stream probes it and never shuffles corpus
-    text (``num_partitions=0`` skips the local-parallelism
-    repartition — cluster mode). The island merge is keyed by the
-    (item, set, doc) triple — the set label is functionally dependent
-    on the item, so the window keys keep the (item, doc) cardinality:
-    finer than the doc-keyed exchange of ``cut_contaminated_spans``
-    but output-bounded, since only positions that matched an eval
-    gram reach the window — leak-volume, not corpus-volume."""
+    corpus positional gram stream probes it, and corpus text crosses
+    the wire only in the doc-keyed tokenize exchange (``_doc_tokens``).
+    The island merge is keyed by the (item, set, doc) triple — the set
+    label is functionally dependent on the item, so the window keys
+    keep the (item, doc) cardinality: finer than the doc-keyed
+    exchange of ``cut_contaminated_spans`` but output-bounded, since
+    only positions that matched an eval gram reach the window —
+    leak-volume, not corpus-volume."""
     if k < 1:
         raise ValueError("k must be >= 1")
     # one data consumer: the probe join
@@ -1433,7 +1396,7 @@ def multi_benchmark_leak_spans(
     # the island window keys by (item, set, doc), so the doc-keyed
     # exchange is a local parallelism aid only
     grams = _gram_stream(
-        _doc_tokens(corpus, text_col, id_col, "__cid", num_partitions),
+        _doc_tokens(corpus, text_col, id_col, "__cid"),
         k,
         "__cid",
         positions=True,
@@ -1598,7 +1561,6 @@ def exact_substring_contamination(
     id_col: str,
     k: int = 13,
     min_hits: int = 1,
-    num_partitions: int | None = None,
     broadcast: bool | str = "auto",
     broadcast_max_digests: int = 4_000_000,
 ) -> DataFrame:
@@ -1616,7 +1578,7 @@ def exact_substring_contamination(
     ``broadcast`` contract are documented there)."""
     return multi_benchmark_contamination(
         corpus, _one_set(benchmark), text_col, id_col, _ONE_SET, k,
-        min_hits, num_partitions, broadcast, broadcast_max_digests,
+        min_hits, broadcast, broadcast_max_digests,
     ).select(id_col, "n_grams", "k_gram_hits", "contaminated")
 
 
@@ -1628,7 +1590,6 @@ def _multi_contamination_probe(
     k: int,
     min_hits: int,
     broadcast: bool,
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """The corpus-side probe of ``multi_benchmark_contamination``
     against a prepared (set, digest) table — factored out so the
@@ -1647,11 +1608,10 @@ def _multi_contamination_probe(
     ``k_gram_hits = n_grams - (unmatched positions)`` — and the
     per-(doc, set) group sizes ARE the attribution hit counts. Two
     chained doc-keyed aggregations ride the repartition's one
-    partitioning, so the corpus text crosses the wire at most once;
-    the rows entering the second are (docs x sets)-bounded, and with
-    ``num_partitions=0`` the only exchange left is the per-(doc, set)
-    partial-agg rows (bytes ~ docs, not corpus text)."""
-    rows = _probe_rows(corpus, text_col, id_col, k, num_partitions)
+    partitioning, so the corpus text crosses the wire once, in the
+    doc-keyed tokenize exchange, and the rows entering the second are
+    (docs x sets)-bounded."""
+    rows = _probe_rows(corpus, text_col, id_col, k)
     probed = rows.join(
         F.broadcast(bench_g) if broadcast else bench_g, "__d", "left"
     )
@@ -1708,7 +1668,6 @@ def multi_benchmark_contamination(
     set_col: str,
     k: int = 13,
     min_hits: int = 1,
-    num_partitions: int | None = None,
     broadcast: bool | str = "auto",
     broadcast_max_digests: int = 4_000_000,
 ) -> DataFrame:
@@ -1729,9 +1688,8 @@ def multi_benchmark_contamination(
     Scale shape: the (set, digest) union follows the family's
     size-checked ``broadcast="auto"`` contract (staged before the
     count so tokenize+distinct runs once); the corpus gram stream
-    probes it and never shuffles (``num_partitions=0`` skips the
-    local-parallelism repartition — cluster mode, corpus text never
-    on the wire); zero joins after the probe — the hit count and the
+    probes it without a further corpus exchange; zero joins after the
+    probe — the hit count and the
     attribution come out of one chained doc-keyed aggregation pair
     riding one partitioning (see ``_multi_contamination_probe``)."""
     if k < 1 or min_hits < 1:
@@ -1744,8 +1702,7 @@ def multi_benchmark_contamination(
         broadcast_max_digests,
     )
     return _multi_contamination_probe(
-        corpus, bench_g, text_col, id_col, k, min_hits, broadcast,
-        num_partitions,
+        corpus, bench_g, text_col, id_col, k, min_hits, broadcast
     )
 
 
@@ -1756,7 +1713,6 @@ def multi_benchmark_leak_report(
     id_col: str,
     set_col: str,
     k: int = 13,
-    num_partitions: int | None = None,
     broadcast: bool | str = "auto",
     broadcast_max_digests: int = 4_000_000,
 ) -> DataFrame:
@@ -1785,10 +1741,9 @@ def multi_benchmark_leak_report(
     per-item totals, and the auto size check all read the staging
     table; eager=False keeps construction lazy, parquet checkpoint
     mode excepted per materialize()'s contract). The corpus gram
-    stream probes it and NEVER shuffles corpus text
-    (``num_partitions=0`` additionally skips the local-parallelism
-    repartition — the cluster setting); every exchange after the
-    probe carries matched (item, doc, digest) triples — leak-volume,
+    stream probes it; corpus text crosses the wire only in the
+    doc-keyed tokenize exchange, and every exchange after the probe
+    carries matched (item, doc, digest) triples — leak-volume,
     not corpus-volume. The distinct-triples table is staged once and
     feeds both rollups (per-item distinct counts via the Expand
     pipeline, and the per-(item, doc) worst-document argmax whose
@@ -1814,7 +1769,7 @@ def multi_benchmark_leak_report(
     # the downstream aggs key by benchmark item: the doc-keyed
     # exchange is a local parallelism aid only
     grams = _gram_stream(
-        _doc_tokens(corpus, text_col, id_col, "__cid", num_partitions), k, "__cid"
+        _doc_tokens(corpus, text_col, id_col, "__cid"), k, "__cid"
     )
     # distinct (item, corpus doc, digest) triples — the per-pair hit
     # table both rollups read; staged once (leak-volume-sized). The
@@ -1953,13 +1908,11 @@ def simhash_near_dups(
     text_col: str,
     id_col: str,
     max_hamming: int = 3,
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """SimHash near-dup pairs: block on 4 x 16-bit chunks (a pair within
     hamming distance 3 must agree on at least one chunk), verify with
     bit_count(xor) summed over the chunks."""
-    n_part = num_partitions or exchange_width(df)
-    df = df.repartition(n_part, id_col)
+    df = df.repartition(exchange_width(df), id_col)
     # the signature table feeds both sides of the self-join;
     # localCheckpoint materializes it once AND frees the blocks on GC
     # (persist leaked cache entries across calls; measured faster too —
@@ -2428,7 +2381,6 @@ def _minhash_sig_base(
     id_col: str,
     num_hashes: int,
     shingle_n: int,
-    n_part: int,
 ) -> DataFrame:
     """(__id, __sh hashed-shingle set, __sig) with the md5-fold digest —
     the auditable staging table shared by the cross-corpus operators."""
@@ -2436,7 +2388,7 @@ def _minhash_sig_base(
         F.conv(F.substring(F.md5(s), 1, 15), 16, 10).cast("bigint"),
         F.lit(_MH_PRIME),
     )
-    shingled = _doc_tokens(df, text_col, id_col, "__id", n_part).select(
+    shingled = _doc_tokens(df, text_col, id_col, "__id").select(
         "__id",
         F.array_distinct(
             F.transform(word_shingles("__w", shingle_n), digest)
@@ -2481,7 +2433,6 @@ def dedup_against(
     bands: int = 16,
     shingle_n: int = 3,
     jaccard_threshold: float = 0.6,
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """CROSS-corpus near-dup flagging: which ``corpus`` documents are
     near-duplicates of anything in ``reference`` — the incremental-
@@ -2498,9 +2449,8 @@ def dedup_against(
     rollup is one keyed aggregation. The reference side is typically
     the smaller/static side — at scale its banded keys come from a
     precomputed signature table, and AQE broadcasts it when small."""
-    n_part = num_partitions or exchange_width(corpus)
-    cb = _minhash_sig_base(corpus, text_col, id_col, num_hashes, shingle_n, n_part)
-    rb = _minhash_sig_base(reference, text_col, id_col, num_hashes, shingle_n, n_part)
+    cb = _minhash_sig_base(corpus, text_col, id_col, num_hashes, shingle_n)
+    rb = _minhash_sig_base(reference, text_col, id_col, num_hashes, shingle_n)
     cand = (
         _band_keys(cb, num_hashes, bands)
         .join(
@@ -2719,7 +2669,6 @@ def containment_lsh_pairs(
     shingle_n: int = 3,
     containment_threshold: float = 0.7,
     hasher: str = "xxhash64",
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """Banded (approximate) containment join — the scale escape hatch
     for ``ngram_containment_pairs``: MinHash-LSH band buckets generate
@@ -2740,8 +2689,7 @@ def containment_lsh_pairs(
     on 31-bit digest collisions); ``hasher="md5"`` keeps the whole
     pipeline ANSI-replicable for external oracles."""
     base, banded = _minhash_state(
-        df, text_col, id_col, num_hashes, bands, shingle_n, hasher,
-        num_partitions,
+        df, text_col, id_col, num_hashes, bands, shingle_n, hasher
     )
     a = banded.select("band", "bhash", F.col("__id").alias("id_a"))
     b = banded.select("band", "bhash", F.col("__id").alias("id_b"))
@@ -2784,7 +2732,6 @@ def ngram_containment_pairs(
     id_col: str,
     shingle_n: int = 3,
     threshold: float = 0.7,
-    num_partitions: int | None = None,
     candidate_budget: int | None = None,
     budget_action: str = "warn",
     stats: dict | None = None,
@@ -2825,11 +2772,8 @@ def ngram_containment_pairs(
     ``candidate_budget=None`` skips the estimate entirely (the
     default plan is unchanged)."""
     _check_budget_action(budget_action)
-    n_part = num_partitions or exchange_width(df)
-    base = _shingle_base(df, text_col, id_col, shingle_n, n_part)
-    posting, prefix = _prefix_postings(
-        base, threshold, n_part, "__id", "shingle", "df_"
-    )
+    base = _shingle_base(df, text_col, id_col, shingle_n)
+    posting, prefix = _prefix_postings(base, threshold, "__id", "shingle", "df_")
     prefix, routed = _budget_route(
         prefix, candidate_budget, budget_action, stats,
         "ngram_containment_pairs",
@@ -2841,7 +2785,6 @@ def ngram_containment_pairs(
             id_col,
             shingle_n=shingle_n,
             containment_threshold=threshold,
-            num_partitions=num_partitions,
             **(route_kwargs or {}),
         ),
     )
@@ -2862,7 +2805,6 @@ def ngram_containment_pairs(
     return _verify_pairs(
         cand,
         base,
-        n_part,
         inter_h / F.col("nh_a") >= F.lit(threshold) - F.lit(1e-6),
         "containment",
         F.round(F.size(F.array_intersect("sh_a", "sh_b")) / F.col("n_a"), 6),

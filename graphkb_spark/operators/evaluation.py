@@ -39,6 +39,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from graphkb_spark.core.materialize import materialize
+from graphkb_spark.operators.skew import exchange_width
 
 DEC = "decimal(38,12)"
 DEC0 = "decimal(38,0)"
@@ -67,7 +68,7 @@ def _prefix_counts(
     two consumers (rows + bucket totals); boundaries shape only the
     plan, the running sums are identical whatever the sampler picked.
     """
-    n_buckets = n_buckets or df.sparkSession.sparkContext.defaultParallelism
+    n_buckets = n_buckets or exchange_width(df)
     bucketed = (
         df.repartitionByRange(n_buckets, F.col(order_col).asc())
         .withColumn("__b", F.spark_partition_id())

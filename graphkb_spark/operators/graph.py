@@ -140,7 +140,6 @@ def hierarchy_rollup(
     src: str = "src",
     dst: str = "dst",
     include_self: bool = True,
-    broadcast: bool | None = None,
     closure_rounds: int | None = None,
 ) -> DataFrame:
     """Aggregate fact rows up an acyclic hierarchy: every fact counts
@@ -153,11 +152,10 @@ def hierarchy_rollup(
     is a dimension. Returns one row per ancestor node (column
     ``node``) with the aggregates.
 
-    ``broadcast``: True forces a broadcast hint on the closure, False
-    forbids it, None (default) leaves the choice to Catalyst/AQE. The
-    closure is O(nodes x depth) — a deep or wide hierarchy can exceed
-    the broadcast limit, where a forced hint fails the job instead of
-    degrading to a shuffle join, so the hint is opt-in.
+    The closure join carries no broadcast hint: the closure is
+    O(nodes x depth), and a deep or wide hierarchy can exceed the
+    broadcast limit, where a forced hint fails the job instead of
+    degrading to a shuffle join.
     """
     closure = transitive_closure(
         edges, src=src, dst=dst, rounds=closure_rounds
@@ -171,8 +169,6 @@ def hierarchy_rollup(
         closure = closure.unionByName(
             nodes.withColumn("node", F.col(fact_node))
         )
-    if broadcast:
-        closure = F.broadcast(closure)
     joined = facts.join(closure, fact_node)
     return joined.groupBy("node").agg(*agg_exprs)
 

@@ -202,7 +202,6 @@ def resolve_unique(
     dim: DataFrame,
     on: Sequence[str] | dict[str, str],
     prefer: Sequence[Column | str],
-    broadcast_dim: bool = True,
     strict: bool = True,
     row_key: Sequence[str] | None = None,
 ) -> DataFrame:
@@ -231,8 +230,7 @@ def resolve_unique(
         c = lft[lc] == dimh[rc]
         cond = c if cond is None else (cond & c)
 
-    right = F.broadcast(dimh) if broadcast_dim else dimh
-    joined = lft.join(right, cond, "left")
+    joined = lft.join(F.broadcast(dimh), cond, "left")
 
     order = [c if isinstance(c, Column) else F.col(c) for c in prefer]
     w = Window.partitionBy(rid).orderBy(*order)
@@ -270,7 +268,6 @@ def cascade_resolve(
     levels: Sequence[Column | tuple[Column, Sequence[Column | str]]],
     select: Sequence[str],
     prefer: Sequence[Column | str] = (),
-    broadcast_dim: bool = True,
 ) -> DataFrame:
     """Fallback-cascade join (reference J3): try each join condition in
     order; the first level that matches wins, ties within a level broken
@@ -316,10 +313,9 @@ def cascade_resolve(
     # drops the unused ones from the physical plan)
     dim_types = dict(dim.dtypes)
     carry = [c for c in dim.columns if c not in left_cols]
-    right = F.broadcast(dim) if broadcast_dim else dim
 
     def lvl_df(i: int, cond: Column) -> DataFrame:
-        return keyed.join(right, cond, "inner").select(
+        return keyed.join(F.broadcast(dim), cond, "inner").select(
             key,
             *left_cols,
             F.lit(i).alias("__lvl"),

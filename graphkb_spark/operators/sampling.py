@@ -287,7 +287,6 @@ def domain_rebalance(
     id_col: str,
     domain_col: str,
     cap: int,
-    broadcast: bool | None = None,
 ) -> DataFrame:
     """Cap every domain's contribution at ``cap`` rows by deterministic
     per-domain downsampling — the web-corpus rebalancing pass that stops
@@ -298,21 +297,17 @@ def domain_rebalance(
     stable across runs — no per-domain global ordering anywhere).
 
     Scale shape: one partial-aggregating shuffle for the per-domain
-    counts (domain-cardinality-sized output), one broadcast-able join
-    to attach the keep-rate, and a scan-speed filter. Unlike a
-    row_number cap (``stratum_cap``), no window ever sees a hot
-    domain's full row set — the filter is embarrassingly parallel,
-    which is what survives a domain with 10^9 pages.
+    counts (domain-cardinality-sized output), one join to attach the
+    keep-rate, and a scan-speed filter. Unlike a row_number cap
+    (``stratum_cap``), no window ever sees a hot domain's full row set
+    — the filter is embarrassingly parallel, which is what survives a
+    domain with 10^9 pages.
 
-    ``broadcast``: True forces a broadcast hint on the count table,
-    False forbids it, None (default) leaves the choice to Catalyst/AQE
-    — the count table is one row per domain, and a web corpus has tens
-    of millions of domains, where a forced hint fails the job instead
-    of degrading to a shuffle join (same contract as
-    ``hierarchy_rollup``)."""
+    The count join carries no broadcast hint: the count table is one
+    row per domain, and a web corpus has tens of millions of domains,
+    where a forced hint fails the job instead of degrading to a
+    shuffle join."""
     counts = df.groupBy(F.col(domain_col)).agg(F.count(F.lit(1)).alias("__n"))
-    if broadcast:
-        counts = F.broadcast(counts)
     # md5-uniform in [0, 1): 8 hex chars / 2^32
     u = (
         F.conv(
@@ -333,7 +328,6 @@ def temperature_sample(
     stratum_col: str,
     alpha_pct: int = 50,
     target_total: int | None = None,
-    broadcast: bool | None = None,
 ) -> DataFrame:
     """Temperature-based mixture rebalancing: stratum s is kept at a
     rate proportional to n_s^alpha / n_s (alpha = ``alpha_pct``/100),
@@ -354,10 +348,9 @@ def temperature_sample(
     id: stable across runs, retries, and engines.
 
     Scale shape: one partial-aggregating count shuffle (stratum-sized
-    output), a join of the rate table (``broadcast``: True forces the
-    hint, None leaves it to Catalyst/AQE — an unbounded stratum column
-    can exceed the broadcast limit, same contract as
-    ``domain_rebalance``), and a scan-speed filter."""
+    output), an unhinted join of the rate table (an unbounded stratum
+    column can exceed the broadcast limit — the ``domain_rebalance``
+    rationale), and a scan-speed filter."""
     counts = df.groupBy(F.col(stratum_col)).agg(
         F.count(F.lit(1)).alias("__n")
     )
@@ -391,8 +384,6 @@ def temperature_sample(
         ).cast("double")
         / F.lit(float(2**32))
     )
-    if broadcast:
-        rates = F.broadcast(rates)
     return (
         df.join(rates, stratum_col)
         .filter(u < F.col("__rate"))

@@ -20,9 +20,11 @@ SALT_COL = "__salt"
 
 
 def exchange_width(df: DataFrame) -> int:
-    """Partition count for EXPLICIT repartitions that exist to defeat
-    AQE byte-coalescing of CPU-dense exchanges (the PPJoin verify pin,
-    the reconcile tier exchange).
+    """The engine's one partition-count policy: every EXPLICIT
+    repartition (pins that defeat AQE byte-coalescing of CPU-dense
+    exchanges — the PPJoin verify pin, the reconcile tier exchange, the
+    doc-keyed tokenize exchange), range-bucket count and scan-
+    parallelism floor reads it, and no operator takes a width option.
 
     ``max(defaultParallelism, spark.sql.shuffle.partitions)`` instead
     of bare ``defaultParallelism`` (opt r18, VERDICT r17 #3): a pin
@@ -105,10 +107,10 @@ def key_skew_profile(
 
 def ensure_scan_parallelism(df: DataFrame, min_parts: int | None = None) -> DataFrame:
     """Round-robin repartition ``df`` iff its physical plan would run on
-    fewer partitions than ``min_parts`` (default: the session's
-    defaultParallelism) — the guide §2.5 "input skew / unsplittable
-    input" fix, made conditional so it is a plan-time NO-OP whenever the
-    scan splits naturally.
+    fewer partitions than ``min_parts`` (default: ``exchange_width``) —
+    the guide §2.5 "input skew / unsplittable input" fix, made
+    conditional so it is a plan-time NO-OP whenever the scan splits
+    naturally.
 
     Why it exists: a CPU-dense stage (decimal aggregation, Arrow-UDF
     parse) directly over a parquet scan inherits the SCAN's partition
@@ -122,7 +124,7 @@ def ensure_scan_parallelism(df: DataFrame, min_parts: int | None = None) -> Data
     path. Apply it AFTER projecting to the columns the dense stage
     needs, so the exchange carries the narrow rows, not the full scan
     width (guide §2.3 "project before the exchange")."""
-    target = min_parts or df.sparkSession.sparkContext.defaultParallelism
+    target = min_parts or exchange_width(df)
     if df.rdd.getNumPartitions() >= target:
         return df
     return df.repartition(target)

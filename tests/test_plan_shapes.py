@@ -164,8 +164,8 @@ BUDGETS = [
     # the broadcast + ONE doc-keyed agg riding the repartition — the
     # r13 fill-in join (and its second corpus pass) is gone, so the
     # pin tightened 3 -> 1 exchange and zero joins besides the probe.
-    # The corpus text crosses the wire at most once (zero times with
-    # num_partitions=0, the cluster setting).
+    # The corpus text crosses the wire exactly once, in the doc-keyed
+    # tokenize exchange, which is always taken.
     ("exactsubstr_decontaminate", 1, 0, True),
     # r15 suite-level flag: same single-aggregation contract — the
     # (set, digest) union probes as ONE broadcast, the flag AND the
@@ -200,18 +200,20 @@ BUDGETS = [
     # the two doc-keyed join-backs (spans + attribution, the 2 SMJs)
     # plus the leak-sized island window and attribution agg exchanges
     ("multi_benchmark_decontaminate", 4, 0, False),
-    # r13 eval-side leak report: per-item digest distinct (staged
-    # once, checkpoint-truncated r14 -> budget tightened 7 -> 5) +
-    # probe + two countDistinct aggs (Expand pipeline) + size-gated
+    # eval-side leak report, the N=1 call of multi_benchmark_leak_report:
+    # the staged digest and distinct-triples tables are
+    # checkpoint-truncated, and projecting away worst_doc drops the
+    # worst-document rollup and its fill-in join (budget 5 -> 4). Left:
+    # the item-list distinct, the per-item totals agg and the two
+    # Expand-pipeline countDistinct exchanges, plus the two size-gated
     # broadcast fill-ins
-    ("benchmark_leak_report", 5, 0, True),
+    ("benchmark_leak_report", 4, 0, True),
     # r16 suite-level leak report: staged per-item digest distinct +
     # broadcast probe + staged distinct-triples table feeding three
     # leak-volume rollups (per-item Expand countDistincts, the
     # per-(item, doc) worst-doc argmax pair, suite-bounded totals) +
-    # size-gated broadcast fill-ins; corpus text crosses the wire at
-    # most once (the local-parallelism repartition; zero times with
-    # num_partitions=0, the cluster setting)
+    # size-gated broadcast fill-ins; corpus text crosses the wire
+    # exactly once, in the doc-keyed tokenize exchange
     ("multi_benchmark_leak_report", 6, 0, True),
     # r14 per-span leak attribution: staged digest probe + one
     # (item, doc)-keyed island window + span agg — the window

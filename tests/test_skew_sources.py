@@ -1,11 +1,12 @@
-"""Salted-join skew utility + the source-reader paths not covered
-elsewhere (batched REST prefetch, XLSX), + hypothesis property tests
-for the two hand-written grammars (DNF, HGVS)."""
+"""Salted-join skew utility, the exchange-width policy, + the
+source-reader paths not covered elsewhere (batched REST prefetch,
+XLSX), + hypothesis property tests for the two hand-written grammars
+(DNF, HGVS)."""
 
 import pytest
 from pyspark.sql import functions as F
 
-from graphkb_spark.operators.skew import salted_join
+from graphkb_spark.operators.skew import exchange_width, salted_join
 from graphkb_spark.sources.readers import fetch_rest_batched
 
 
@@ -29,6 +30,22 @@ def test_salted_join_left_keeps_unmatched(spark):
     out = salted_join(fact, dim, ["key"], salt=3, how="left").collect()
     got = {r.fid: r.v for r in out}
     assert got == {1: 10, 2: None}
+
+
+def test_exchange_width_is_max_of_cores_and_shuffle_partitions(spark):
+    """The engine's one width source follows shuffle.partitions upward
+    and never drops below the core count."""
+    df = spark.range(1)
+    dp = spark.sparkContext.defaultParallelism
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key)
+    try:
+        spark.conf.set(key, str(2 * dp))
+        assert exchange_width(df) == 2 * dp
+        spark.conf.set(key, "1")
+        assert exchange_width(df) == dp
+    finally:
+        spark.conf.set(key, prev)
 
 
 def test_fetch_rest_batched_chunks_and_dedups(spark):

@@ -73,7 +73,10 @@ def consume(df) -> int:
 
 def main() -> None:
     root = os.path.abspath(sys.argv[1])
-    out = sys.argv[2]
+    # resolved before the chdir below, and checked before any query runs
+    out = os.path.abspath(sys.argv[2])
+    if not os.path.isdir(os.path.dirname(out)):
+        sys.exit(f"ab_bench: output directory {os.path.dirname(out)} does not exist")
     names = sys.argv[3:]
     sys.path.insert(0, root)
     os.chdir(root)

@@ -1,12 +1,13 @@
 """Stage-level profiler for headline queries (optimization round 17).
 
 Guide §1 empirical loop without a browser: run one query under the
-bench's consume() action in a session with the UI REST API enabled,
-then pull per-stage metrics (wall, task time, shuffle read/write,
-input bytes, spill) from http://localhost:<port>/api/v1 and print the
-stages of the TIMED run sorted by executor run time. This attributes a
-query's wall to scan / exchange / window / UDF stages the same way the
-Spark UI's stage table would.
+bench's consume() action in the bench's own session (``get_spark``),
+tag every trial with a job group, then read per-stage metrics (wall,
+task time, shuffle read/write, input bytes, spill) for the fastest
+trial's jobs from the in-process status store and print them sorted by
+stage wall. This attributes a query's wall to scan / exchange / window
+/ UDF stages the same way the Spark UI's stage table would, with the UI
+off.
 
 Usage:
     python tools/opt_profile.py QUERY [QUERY ...] [--sf DIR] [--trials N]
@@ -18,29 +19,57 @@ from __future__ import annotations
 
 import argparse
 import gc
-import json
 import sys
 import time
-import urllib.request
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 
-def _rest(base: str, path: str):
-    with urllib.request.urlopen(base + path, timeout=10) as r:
-        return json.loads(r.read())
+def _ms(opt_date) -> float | None:
+    """A status-store ``Option[Date]`` as epoch ms (None when unset)."""
+    return float(opt_date.get().getTime()) if opt_date.isDefined() else None
 
 
-def _epoch_ms(iso: str) -> float:
-    """Parse the REST API's '2026-08-17T11:20:33.123GMT' to epoch ms."""
-    from datetime import datetime, timezone
+def stage_rows(sc, group: str) -> list[dict]:
+    """One row per stage executed by the jobs of ``group``; stages
+    skipped because their shuffle output already existed are left
+    out."""
+    from py4j.protocol import Py4JJavaError
 
-    iso = iso.replace("GMT", "")
-    dt = datetime.strptime(iso, "%Y-%m-%dT%H:%M:%S.%f").replace(
-        tzinfo=timezone.utc
-    )
-    return dt.timestamp() * 1000.0
+    sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
+    tracker = sc.statusTracker()
+    store = sc._jsc.sc().statusStore()
+    rows, seen = [], set()
+    for jid in tracker.getJobIdsForGroup(group):
+        info = tracker.getJobInfo(jid)
+        for sid in info.stageIds if info else ():
+            try:
+                s = store.lastStageAttempt(sid)
+            except Py4JJavaError:  # stage never submitted
+                continue
+            # a shuffle stage shared by two jobs of the group counts once
+            if sid in seen or s.status().toString() != "COMPLETE":
+                continue
+            seen.add(sid)
+            start = _ms(s.firstTaskLaunchedTime()) or _ms(s.submissionTime())
+            end = _ms(s.completionTime())
+            rows.append(
+                {
+                    "stage": s.stageId(),
+                    "name": s.name().split("\n")[0][:80],
+                    "tasks": s.numCompleteTasks(),
+                    "wall_ms": int(end - start) if start and end else 0,
+                    "run_ms": s.executorRunTime(),
+                    "cpu_ms": int(s.executorCpuTime() / 1e6),
+                    "in_mb": round(s.inputBytes() / 1e6, 2),
+                    "sh_r_mb": round(s.shuffleReadBytes() / 1e6, 2),
+                    "sh_w_mb": round(s.shuffleWriteBytes() / 1e6, 2),
+                    "fetch_ms": s.shuffleFetchWaitTime(),
+                    "spill_mb": round(s.memoryBytesSpilled() / 1e6, 2),
+                }
+            )
+    return rows
 
 
 def main() -> None:
@@ -50,92 +79,38 @@ def main() -> None:
     ap.add_argument("--trials", type=int, default=3)
     args = ap.parse_args()
 
-    import os
-
-    os.environ.setdefault("SPARK_GRAFT_CPUS", "32")
-    # build the bench session but with the UI on for the REST API
-    from pyspark.sql import SparkSession
-
     import __spark_entry__ as entrymod
     from graphkb_spark.core.actions import consume
+    from graphkb_spark.session import get_spark
 
-    # the bench session's configs, with the UI turned on
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("opt_profile")
-        .config("spark.sql.shuffle.partitions", str(cpus))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
-        .config("spark.ui.enabled", "true")
-        .config("spark.ui.port", "4099")
-        .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("WARN")
-    base = f"http://localhost:4099/api/v1"
-    app_id = spark.sparkContext.applicationId
-
+    spark = get_spark("opt_profile")
+    sc = spark.sparkContext
     queries = entrymod.queries()
     consume(queries["pricing_summary"](spark, args.sf))  # JVM warm
 
     for name in args.queries:
         fn = queries[name]
         spark.catalog.clearCache()
-        spark.sparkContext.setJobDescription(f"{name}: warmup")
+        sc.setJobGroup(f"{name}: warmup", f"{name}: warmup")
         consume(fn(spark, args.sf))
         best = float("inf")
-        best_window = None
+        best_group = None
         for t in range(args.trials):
             spark.catalog.clearCache()
             gc.collect()
             try:
-                spark.sparkContext._jvm.System.gc()
+                sc._jvm.System.gc()
             except Exception:
                 pass
-            spark.sparkContext.setJobDescription(f"{name}: trial{t}")
+            group = f"{name}: trial{t}"
+            sc.setJobGroup(group, group)
             t0 = time.time()
             consume(fn(spark, args.sf))
             dt = time.time() - t0
             if dt < best:
-                best = dt
-                best_window = (t0 * 1000.0, time.time() * 1000.0)
-        spark.sparkContext.setJobDescription(None)
+                best, best_group = dt, group
 
-        stages = _rest(base, f"/applications/{app_id}/stages?status=complete")
-        lo, hi = best_window
-        rows = []
-        for s in stages:
-            sub = s.get("firstTaskLaunchedTime") or s.get("submissionTime")
-            if not sub:
-                continue
-            ts = _epoch_ms(sub)
-            if not (lo - 500 <= ts <= hi + 500):
-                continue
-            comp = s.get("completionTime")
-            wall = (_epoch_ms(comp) - ts) if comp else 0.0
-            rows.append(
-                {
-                    "stage": s["stageId"],
-                    "name": s["name"].split("\n")[0][:80],
-                    "tasks": s["numCompleteTasks"],
-                    "wall_ms": int(wall),
-                    "run_ms": s.get("executorRunTime", 0),
-                    "cpu_ms": int(s.get("executorCpuTime", 0) / 1e6),
-                    "in_mb": round(s.get("inputBytes", 0) / 1e6, 2),
-                    "sh_r_mb": round(s.get("shuffleReadBytes", 0) / 1e6, 2),
-                    "sh_w_mb": round(s.get("shuffleWriteBytes", 0) / 1e6, 2),
-                    "fetch_ms": s.get("shuffleFetchWaitTime", 0),
-                    "spill_mb": round(s.get("memoryBytesSpilled", 0) / 1e6, 2),
-                    "desc": (s.get("description") or "")[:40],
-                }
-            )
+        rows = stage_rows(sc, best_group)
         rows.sort(key=lambda r: -r["wall_ms"])
         print(f"\n=== {name}: best wall {best:.3f}s over {args.trials} trials "
               f"({len(rows)} stages in timed window) ===")
